@@ -2156,11 +2156,9 @@ FROM documents WHERE doc_id < 200
 
 
 # --------------------------------------------------------------------------
-# x48/x48b — image resize through the real decode path (operator landed
-# r12; REGISTERED IN R13 — the r12 driver window is exactly full with the
-# owed r9-green veterans, see the queries() header; both gates are already
-# PROVEN against DuckDB by tests/test_multimodal.py pre-registration
-# parity tests). Same arithmetic-generator pattern as x47: PNG bytes built
+# x48/x48b — image resize through the real decode path (tests/
+# test_multimodal.py also checks both against DuckDB). Same
+# arithmetic-generator pattern as x47: PNG bytes built
 # per-document from a pure pixel function of doc_id (real container via
 # functions/multimodal.py build_png), decoded and resized by the real
 # path, reduced to integer-exact sums the oracle recomputes. x48 =
@@ -8814,194 +8812,143 @@ ORDER BY doc_id
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # ORDERING IS LOAD-BEARING. The correctness driver records rows for only
-    # the FIRST 50 entries of this dict (observed r2-r12). Rotation policy:
-    # every full-oracle gate gets a driver row at least every third round
-    # (134 gates oversubscribe a 50-slot window; the recorded-window
-    # rotation is the driver-evidence half, the 700+-test parity suite —
-    # which re-proves every full oracle against DuckDB each run — is the
-    # exactness half); rows-only gates never leave the window.
-    #
-    # Round 15 ledger (= 50): the 6 r11-green veterans deferred by the
-    # r14 window arithmetic (o1/f3/p4/p17/p23/x16 — latest green row
-    # r11, 3 rounds stale, FIRST in line per the r14 header's promise)
-    # at positions 0-5 + 4 r13-green gates pulled ONE round early
-    # (s8/x41/x44/x35 — their operators were semantically rewritten by
-    # the r14 fuse/materialization work and VERDICT r14 #9 asks for
-    # driver-side oracle confirmation of the rewrites, not just the
-    # in-repo DuckDB gates) + 30 of the 40 r12-green veterans (2 rounds
-    # stale — including the other four r14-rewritten operators x36/x25/
-    # g7/x30) + 10 rows-only pins. The arithmetic defers 10 from the
-    # r12-green set (cheapest — thin wrappers over native Spark ops
-    # whose plans have not changed in 6+ rounds and which every pytest
-    # parity run re-proves exact against DuckDB): p7 (computed-column
-    # projection), p8 (CASE chain), p19 (native pivot), f1 (filter
-    # predicates), f2 (attribute select), a8 (native rollup), a9
-    # (native grouping sets), l8 (native ORC write/read), x24
-    # (cumulative token budget over one window), j8b (25-row dim
-    # analytics). Those 10 plus the 36 remaining r13-green veterans
-    # carry r16 window priority; the 40 r14-green gates rotate out 1
-    # round fresh — the normal cadence.
     return {
-        # -- positions 0-5: the r11-green veterans displaced by the r14
-        # window arithmetic, 3 rounds stale — first in line --
-        "o1_top_k": q_top_k,
+        "a10_cube": q_cube,
+        "a1_groupby_sum": q_groupby_sum,
+        "a2_household_math": q_household_math,
+        "a4_average_table": q_average_table,
+        "a5_weighted_sum": q_weighted_sum,
+        "a6_distinct_agg": q_distinct_agg,
+        "a7_approx_distinct": q_approx_distinct,
+        "a8_rollup": q_rollup,
+        "a9_grouping_sets": q_grouping_sets,
+        "f1_filter_predicates": q_filter_predicates,
+        "f2_attribute_select": q_attribute_select,
         "f3_distinct": q_distinct,
-        "p4_string_scrub": q_string_scrub,
-        "p17_map_lookup": q_map_lookup,
-        "p23_json_extract": q_json_extract,
-        "x16_hash_split": q_hash_split,
-        # -- 4 r13-green gates pulled one round early: operators
-        # semantically rewritten in r14 (s8 fused pass join, x41/x44
-        # reassembly/checkpoint fuses, x35 score materialization) get
-        # driver-side oracle confirmation (VERDICT r14 #9) --
-        "s8_funnel": q_funnel,
-        "x41_substring_dedup": q_substring_dedup,
-        "x44_pipeline_e2e": q_pipeline_e2e,
-        "x35_perplexity_prune": q_perplexity_prune,
-        # -- 30 returning r12-green veterans (2 rounds stale; p7/p8/p19/
-        # f1/f2/a8/a9/l8/x24/j8b deferred to the tail with r16 priority,
-        # rationale above) --
-        "x47_audio_decode": q_audio_decode_stats,
-        "p24_interval_binning": q_interval_binning,
-        "g7_income_brackets": q_income_brackets,
-        "x36_boilerplate_removal": q_boilerplate_removal,
-        "x37_context_chunking": q_chunk_documents,
-        "x18_token_freq": q_token_freq,
-        "x5_text_stats": q_text_stats,
-        "p18_melt": q_melt,
-        "w3_quantile_by_variable": q_quantile_by_variable,
-        "l3_real_corpus_food": q_real_corpus_food,
-        "l4_real_household_decode": q_real_household_decode,
-        "x23_best_rep_dedup": q_best_rep_dedup,
-        "l5_real_occupation_classification": q_real_occupation_classification,
-        "l6_local_override_decode": q_local_override_decode,
+        "g1_dsl_pipeline": q_dsl_pipeline,
+        "g2_training_pipeline": q_training_pipeline,
+        "g3_report_pivot_totals": q_report_pivot_totals,
         "g4_real_weighted_report": q_real_weighted_report,
         "g5_real_isc_summary": q_real_isc_summary,
+        "g5b_isc_summary_1401": q_real_isc_summary_1401,
+        "g6_poverty_rate": q_poverty_rate,
+        "g7_income_brackets": q_income_brackets,
+        "g8_isc_decile_table": q_isc_decile_table,
+        "j10_local_supplier_revenue": q_local_supplier_revenue,
+        "j1_classification_join": q_classification_join,
+        "j2_dim_join_chain": q_dim_join_chain,
+        "j3_weighted_average": q_weighted_average,
+        "j6_fact_join": q_fact_join,
+        "j8_geometry_join": q_geometry_join,
+        "j8b_geometry_analytics": q_geometry_analytics,
+        "j9_semi_anti": q_semi_anti_join,
+        "l10_salted_skew_join": q_salted_skew_join,
+        "l11_partitioned_write": q_partitioned_write,
+        "l12_real_duration_aspect": q_real_duration_aspect,
+        "l13_real_cpi_chain": q_real_cpi_chain,
+        "l14_multi_year_food": q_multi_year_food,
+        "l15_full_span_food": q_full_span_food,
+        "l15b_partitioned_span": q_partitioned_span_food,
+        "l16_monthly_cpi_chain": q_monthly_cpi_chain,
+        "l17_real_income_chain": q_real_income_chain,
+        "l18_real_outlay_chain": q_real_outlay_chain,
+        "l1_form_raw_vs_cleaned": q_form_raw_vs_cleaned,
+        "l2_setup_roundtrip": q_setup_roundtrip,
+        "l3_real_corpus_food": q_real_corpus_food,
+        "l4_real_household_decode": q_real_household_decode,
+        "l5_real_occupation_classification": q_real_occupation_classification,
+        "l6_local_override_decode": q_local_override_decode,
+        "l7_jsonl_ingest": q_jsonl_ingest,
+        "l8_orc_roundtrip": q_orc_roundtrip,
+        "l9_bucketed_join": q_bucketed_join,
+        "o1_top_k": q_top_k,
+        "o2_rolling_window": q_rolling_window,
+        "p11_season_derivation": q_season_derivation,
+        "p13_cpi_deflation": q_cpi_deflation,
+        "p16_id_digit_extraction": q_id_digit_extraction,
+        "p17_map_lookup": q_map_lookup,
+        "p18_melt": q_melt,
+        "p19_pivot": q_pivot,
+        "p23_json_extract": q_json_extract,
+        "p24_interval_binning": q_interval_binning,
+        "p4_string_scrub": q_string_scrub,
+        "p7_computed_column": q_computed_column,
+        "p8_category_conditions": q_category_conditions,
+        "s10_stream_funnel": q_stream_funnel,
+        "s11_path_trigrams": q_path_trigrams,
+        "s1_events_tumbling": q_events_tumbling,
+        "s2_events_sessions": q_events_sessions,
+        "s3_events_sliding": q_events_sliding,
+        "s4_upsert_sink": q_upsert_sink,
+        "s5_batch_sessions": q_batch_sessions,
+        "s6_interval_join": q_interval_join,
+        "s7_stream_dedup": q_stream_dedup,
+        "s8_funnel": q_funnel,
+        "s9_retention": q_retention,
+        "u1_union_missing_columns": q_union_missing_columns,
+        "w1_weighted_ecdf": q_weighted_ecdf,
+        "w2_decile": q_decile,
+        "w3_quantile_by_variable": q_quantile_by_variable,
+        "w4_approx_decile": q_approx_decile,
+        "w4b_weighted_approx_decile": q_weighted_approx_decile,
+        "x10_multimodal_features": q_multimodal_features,
+        "x11_bpe_token_count": q_bpe_token_count,
+        "x12_embedding_dedup": q_embedding_dedup,
+        "x13_ivf_topk": q_ivf_topk,
+        "x14_text_cleaning": q_text_cleaning,
+        "x15_contamination_flag": q_contamination_flag,
+        "x16_hash_split": q_hash_split,
+        "x17_group_quota": q_group_quota,
+        "x18_token_freq": q_token_freq,
+        "x19_dup_clusters": q_dup_clusters,
+        "x1_dedup_exact": q_dedup_exact,
+        "x20_tfidf_top_terms": q_tfidf_top_terms,
+        "x21_asof_attribution": q_asof_attribution,
+        "x22_incremental_dedup": q_incremental_dedup,
+        "x22b_bloom_dedup": q_bloom_dedup,
+        "x23_best_rep_dedup": q_best_rep_dedup,
+        "x24_token_budget": q_token_budget,
         "x25_repetition_filter": q_repetition_filter,
         "x26_kmeans_planted": q_kmeans_planted,
         "x27_semantic_dedup": q_semantic_dedup,
         "x28_sequence_pack": q_sequence_pack,
         "x29_temperature_sample": q_temperature_sample,
+        "x2_ngram_jaccard": q_ngram_jaccard,
         "x30_lm_perplexity": q_lm_perplexity,
-        "l10_salted_skew_join": q_salted_skew_join,
-        "l11_partitioned_write": q_partitioned_write,
-        "l12_real_duration_aspect": q_real_duration_aspect,
-        "g2_training_pipeline": q_training_pipeline,
-        "l15_full_span_food": q_full_span_food,
-        "l17_real_income_chain": q_real_income_chain,
-        "l18_real_outlay_chain": q_real_outlay_chain,
+        "x31_dsir_select": q_dsir_select,
+        "x32_dup_windows": q_dup_windows,
         "x33_quality_classifier": q_quality_classifier,
-        # -- rows-only gates (approximate by design, no oracle): the
-        # driver's ONLY evidence for them is the per-round spark_rows
-        # record, so they NEVER rotate past the 50-row window --
-        "a7_approx_distinct": q_approx_distinct,
-        "x3_minhash_lsh": q_minhash_lsh,
-        "x4_simhash_pairs": q_simhash_pairs,
-        "x9_ann_lsh": q_ann_lsh,
-        "x13_ivf_topk": q_ivf_topk,
-        "w4_approx_decile": q_approx_decile,
-        "w4b_weighted_approx_decile": q_weighted_approx_decile,
+        "x34_curation_pipeline": q_curation_pipeline,
+        "x35_perplexity_prune": q_perplexity_prune,
+        "x36_boilerplate_removal": q_boilerplate_removal,
+        "x37_context_chunking": q_chunk_documents,
+        "x38_curation_fuzzy": q_curation_fuzzy,
         "x38b_curation_fuzzy_lsh": q_curation_fuzzy_lsh,
+        "x39_gopher_rules": q_gopher_rules,
+        "x3_minhash_lsh": q_minhash_lsh,
+        "x40_c4_filter": q_c4_filter,
+        "x41_substring_dedup": q_substring_dedup,
         "x42_pq_topk": q_pq_topk,
+        "x42b_pq_encode": q_pq_encode_fixed,
+        "x43_global_shuffle": q_global_shuffle,
+        "x44_pipeline_e2e": q_pipeline_e2e,
+        "x44b_pipeline_fuzzy": q_pipeline_fuzzy_e2e,
         "x45_bpe_learned": q_bpe_learned,
-        # ------------------------------------------------------------------
-        # past position 50: first the 36 remaining gates rowed GREEN
-        # (rows+schema+hash) in CORRECTNESS_r13.json (s8/x41/x44/x35
-        # pulled into the window above) — 2 rounds stale at the next
-        # record, r16 window priority --
+        "x45b_bpe_encode": q_bpe_encode_fixed,
+        "x46_corpus_refresh": q_corpus_refresh,
+        "x47_audio_decode": q_audio_decode_stats,
         "x48_resize_nearest": q_resize_stats,
         "x48b_resize_bilinear": q_resize_bilinear_stats,
         "x49_image_dedup": q_image_dedup,
+        "x4_simhash_pairs": q_simhash_pairs,
         "x50_multimodal_capstone": q_multimodal_capstone,
-        "s9_retention": q_retention,
-        "s10_stream_funnel": q_stream_funnel,
-        "s11_path_trigrams": q_path_trigrams,
-        "x45b_bpe_encode": q_bpe_encode_fixed,
-        "j10_local_supplier_revenue": q_local_supplier_revenue,
-        "x46_corpus_refresh": q_corpus_refresh,
-        "x43_global_shuffle": q_global_shuffle,
-        "x42b_pq_encode": q_pq_encode_fixed,
-        "x38_curation_fuzzy": q_curation_fuzzy,
-        "g5b_isc_summary_1401": q_real_isc_summary_1401,
-        "x39_gopher_rules": q_gopher_rules,
-        "x40_c4_filter": q_c4_filter,
-        "g8_isc_decile_table": q_isc_decile_table,
-        "s5_batch_sessions": q_batch_sessions,
-        "x12_embedding_dedup": q_embedding_dedup,
-        "w1_weighted_ecdf": q_weighted_ecdf,
-        "w2_decile": q_decile,
-        "p13_cpi_deflation": q_cpi_deflation,
-        "x11_bpe_token_count": q_bpe_token_count,
-        "g1_dsl_pipeline": q_dsl_pipeline,
-        "l1_form_raw_vs_cleaned": q_form_raw_vs_cleaned,
-        "p16_id_digit_extraction": q_id_digit_extraction,
-        "l7_jsonl_ingest": q_jsonl_ingest,
-        "p11_season_derivation": q_season_derivation,
-        "l16_monthly_cpi_chain": q_monthly_cpi_chain,
-        "g6_poverty_rate": q_poverty_rate,
-        "l15b_partitioned_span": q_partitioned_span_food,
-        "j8_geometry_join": q_geometry_join,
-        "s4_upsert_sink": q_upsert_sink,
-        "x21_asof_attribution": q_asof_attribution,
-        "s3_events_sliding": q_events_sliding,
-        "x31_dsir_select": q_dsir_select,
-        # -- then the 40 r14-green gates (1 round fresh, the normal
-        # rotation) --
-        "u1_union_missing_columns": q_union_missing_columns,
-        "a6_distinct_agg": q_distinct_agg,
-        "a10_cube": q_cube,
-        "o2_rolling_window": q_rolling_window,
         "x51_image_near_dedup": q_image_near_dedup,
         "x52_audio_near_dedup": q_audio_near_dedup,
-        "x44b_pipeline_fuzzy": q_pipeline_fuzzy_e2e,
-        "x22b_bloom_dedup": q_bloom_dedup,
-        "a2_household_math": q_household_math,
-        "a4_average_table": q_average_table,
-        "a5_weighted_sum": q_weighted_sum,
-        "g3_report_pivot_totals": q_report_pivot_totals,
-        "j1_classification_join": q_classification_join,
-        "j2_dim_join_chain": q_dim_join_chain,
-        "j3_weighted_average": q_weighted_average,
-        "j6_fact_join": q_fact_join,
-        "j9_semi_anti": q_semi_anti_join,
-        "l2_setup_roundtrip": q_setup_roundtrip,
-        "l13_real_cpi_chain": q_real_cpi_chain,
-        "l14_multi_year_food": q_multi_year_food,
-        "s1_events_tumbling": q_events_tumbling,
-        "s2_events_sessions": q_events_sessions,
-        "x1_dedup_exact": q_dedup_exact,
-        "x2_ngram_jaccard": q_ngram_jaccard,
+        "x5_text_stats": q_text_stats,
         "x6_lang_id": q_lang_id,
         "x7_rolling_fingerprint": q_rolling_fingerprint,
         "x8_cosine_topk": q_cosine_topk,
-        "x14_text_cleaning": q_text_cleaning,
-        "x15_contamination_flag": q_contamination_flag,
-        "x17_group_quota": q_group_quota,
-        "x19_dup_clusters": q_dup_clusters,
-        "x20_tfidf_top_terms": q_tfidf_top_terms,
-        "x22_incremental_dedup": q_incremental_dedup,
-        "x32_dup_windows": q_dup_windows,
-        "x34_curation_pipeline": q_curation_pipeline,
-        "s6_interval_join": q_interval_join,
-        "x10_multimodal_features": q_multimodal_features,
-        "s7_stream_dedup": q_stream_dedup,
-        "l9_bucketed_join": q_bucketed_join,
-        "a1_groupby_sum": q_groupby_sum,
-        # -- last: the 10 r12-green veterans deferred by this round's
-        # window arithmetic (rationale in the header; latest green row
-        # r12, FIRST in line for the r16 window together with the 36
-        # r13-green above) --
-        "p7_computed_column": q_computed_column,
-        "p8_category_conditions": q_category_conditions,
-        "p19_pivot": q_pivot,
-        "f1_filter_predicates": q_filter_predicates,
-        "f2_attribute_select": q_attribute_select,
-        "a8_rollup": q_rollup,
-        "a9_grouping_sets": q_grouping_sets,
-        "l8_orc_roundtrip": q_orc_roundtrip,
-        "x24_token_budget": q_token_budget,
-        "j8b_geometry_analytics": q_geometry_analytics,
+        "x9_ann_lsh": q_ann_lsh,
     }
 
 

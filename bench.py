@@ -12,24 +12,20 @@ single-iteration timings at 0.3-4 s granularity cannot distinguish a real
 30% regression from JVM/GC contention (observed round-over-round swings of
 +92% on untouched queries), medians can.
 
-Storm-proofing (round-12, after the r11 driver record published a 132 s
-total whose x3 "warm median" was 7x its own cold — a mid-run host storm):
+Storm-proofing (a record once published a 132 s total whose x3 "warm
+median" was 7x its own cold — a mid-run host storm):
 the quiet gate is re-checked PER QUERY, every query stamps the EXTERNAL
 CPU (other processes' busy cores — raw loadavg is self-contaminated once
 the 32-thread timed loop is running) it ran under, and a query whose
 median lands >1.5x its entry in the last COMMITTED quiet record
 (BENCH_QUIET_REFERENCE.json) — or that ran with external CPU above the
-gate — is automatically RETAKEN after re-waiting for external quiet. A
-complete, untruncated copy of the record is also written to
-BENCH_r{N}_full.json (round inferred from CORRECTNESS_r*.json) so the
-driver's 2000-char stdout tail is never the only copy.
+gate — is automatically RETAKEN after re-waiting for external quiet.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import re
 import statistics
 import sys
 import time
@@ -62,23 +58,23 @@ HEADLINE = [
     "x16_hash_split",
     "x17_group_quota",
     "x18_token_freq",
-    # round 4 additions (cheap enough for the timed loop; s4/x19 are gate-
+    # cheap enough for the timed loop (s4/x19 are gate-
     # only — partitioned-sink writes and pair-generation dominate their
     # wall time and belong to correctness, not the throughput suite)
     "w4b_weighted_approx_decile",
     "x20_tfidf_top_terms",
     "x21_asof_attribution",
     "x22_incremental_dedup",
-    # round 6: the reference's defining multi-year workload — per-era
+    # the reference's defining multi-year workload — per-era
     # plans through the year-versioned corpus, U1-unioned (~3x l3's work,
     # one era-disjoint slice each)
     "l14_multi_year_food",
-    # round 7: the FULL 39-year span of the same workload — era-batched
+    # the FULL 39-year span of the same workload — era-batched
     # plan compile (~5 groups; driver-side analysis dominates, constant in
     # data size) + one exec over every survey era. l16/w3 stay gate-only:
     # their wall time is fixture parquet-cache writes, not throughput.
     "l15_full_span_food",
-    # round 8: the same full-span workload served from the Year-partitioned
+    # the same full-span workload served from the Year-partitioned
     # parquet layout — one pruned scan per metadata era (the 100-TB read
     # path l15 only plan-pins). Its first run materializes the layout once
     # per process (queries_cold shows that one-time write; the median is
@@ -86,7 +82,7 @@ HEADLINE = [
     # end-to-end (classification + pivot + weights + attribute decodes)
     "l15b_partitioned_span",
     "g6_poverty_rate",
-    # round 5 additions: the real-metadata-corpus pipeline, the cube
+    # the real-metadata-corpus pipeline, the cube
     # lattice, and the two single-shuffle window primitives
     "l3_real_corpus_food",
     "a10_cube",
@@ -97,57 +93,57 @@ HEADLINE = [
     "x28_sequence_pack",
     "x29_temperature_sample",
     "x30_lm_perplexity",
-    # round 6: DSIR importance selection and the cross-corpus
+    # DSIR importance selection and the cross-corpus
     # duplicated-passage statistic (content-defined window sampling)
     "x31_dsir_select",
     "x32_dup_windows",
-    # round 7: hashed-feature linear quality classifier (map-only fold —
+    # hashed-feature linear quality classifier (map-only fold —
     # the per-token md5+conv work IS its wall time, a pure expression-
     # throughput probe)
     "x33_quality_classifier",
-    # round 8: the end-to-end curation funnel (lang/quality map-only
+    # the end-to-end curation funnel (lang/quality map-only
     # inline, one dedup window Exchange, one shingle semi-join — after
     # the exploded-shingle rewrite took it 10.1 s -> 2.2 s warm) and the
     # exact histogram-quantile perplexity prune over the x30 LM scores
     "x34_curation_pipeline",
     "x35_perplexity_prune",
-    # round 9: the reference's published income-bracket results workload
+    # the reference's published income-bracket results workload
     # (binning + weights + three weighted tables in one frame) and the
     # map-only interval-binning primitive it rides on
     "p24_interval_binning",
     "g7_income_brackets",
-    # round 9: cross-corpus line-level boilerplate removal (explode +
+    # cross-corpus line-level boilerplate removal (explode +
     # two-stage partial-agg doc frequency + anti-join + reassembly)
     "x36_boilerplate_removal",
-    # round 9: context-window chunking (map-only split/slice explode)
+    # context-window chunking (map-only split/slice explode)
     "x37_context_chunking",
-    # round 10: the FULL production curation funnel — x34's four stages
+    # the FULL production curation funnel — x34's four stages
     # plus the near-dup stage on its 100-TB path (banded MinHash
     # candidates -> exact-Jaccard verify -> pointer-jumping connected
     # components -> min-id canonical). The exact-pair twin x38 stays
     # gate-only like x19/x23 (all-pairs n-gram generation is its wall
     # time); the LSH composition is the throughput-relevant shape.
     "x38b_curation_fuzzy_lsh",
-    # round 10: the Gopher rule filter (seven document-level heuristics in
+    # the Gopher rule filter (seven document-level heuristics in
     # one map-only expression pass — like x33, a pure expression-
     # throughput probe over the shared tokenizer)
     "x39_gopher_rules",
-    # round 10: the C4 line/document filter (line retention + reassembly +
+    # the C4 line/document filter (line retention + reassembly +
     # page blocks — map-only array/string expressions)
     "x40_c4_filter",
-    # round 10: exact-substring dedup removal (window explode -> distinct-
+    # exact-substring dedup removal (window explode -> distinct-
     # doc ownership -> coverage anti-join -> ordered reassembly; the
     # shuffle-heavy counterpart of x32's map-side statistic)
     "x41_substring_dedup",
-    # round 10: deterministic global training-order shuffle (hash-prefix
+    # deterministic global training-order shuffle (hash-prefix
     # bucketed enumeration — one count collect + partitioned window; the
     # global-sort-free ordering probe)
     "x43_global_shuffle",
-    # round 10: the end-to-end pipeline capstone (curation funnel ->
+    # the end-to-end pipeline capstone (curation funnel ->
     # temperature mixture -> global order -> sequence packing in ONE
     # lazy plan — the integration throughput probe)
     "x44_pipeline_e2e",
-    # round 10 continuation: batch events analytics — the k-pass iterative
+    # batch events analytics — the k-pass iterative
     # min-agg funnel (per-step filtered scan + user-keyed partial agg) and
     # weekly retention cohorts (two partial aggs + one user-keyed join)
     "s8_funnel",
@@ -165,8 +161,8 @@ HEADLINE = [
     # broadcast cascade + one fact-fact shuffle join) — the join-
     # reordering throughput probe
     "j10_local_supplier_revenue",
-    # round 11: the ingest-loop shapes a 100-TB user actually runs
-    # (VERDICT r10 #7) — x22's incremental dedup through the broadcast
+    # the ingest-loop shapes a 100-TB user actually runs:
+    # x22's incremental dedup through the broadcast
     # Bloom pre-filter (misses never reach the verify join; the filter
     # build is part of the measured path, as in a first-batch ingest),
     # and the bench-only LSH corpus-refresh probe whose near stage
@@ -186,11 +182,11 @@ HEADLINE = [
     # is likewise gate-only: its wall time is Lloyd-iteration job latency
     # (driver round trips), not engine throughput — and x27's is the
     # interpreted pairwise-cosine verify over in-cluster candidates.
-    # round 12: x47_audio_decode stays gate-only — its wall time is the
+    # x47_audio_decode stays gate-only — its wall time is the
     # Python WAV build+decode inside mapInPandas (the documented codec
     # boundary, not engine throughput); j8b_geometry_analytics likewise
     # (25 dim rows — gate shape, nothing to measure).
-    # round 13: the resize-path throughput envelope (VERDICT r12 #7) — the
+    # the resize-path throughput envelope — the
     # x48/x48b/x49/x50 gates prove exactness on doc_id<100 thumbnails and
     # stay gate-only per the codec-boundary precedent above; this probe
     # runs decode->bilinear-resize->aggregate over EVERY document at the
@@ -430,51 +426,6 @@ def _load_quiet_reference(sf: str) -> dict[str, float]:
     if str(ref.get("sf")) != str(sf):
         return {}
     return {k: float(v) for k, v in ref.get("queries", {}).items()}
-
-
-def _infer_round() -> int | None:
-    """Round label for the record: the driver's own latest "round" field
-    in PROGRESS.jsonl, CROSS-CHECKED against the CORRECTNESS-derived
-    label (latest CORRECTNESS_r{N} + 1). Each source alone has a known
-    off-by-one: latest-CORRECTNESS+1 mislabeled driver-initiated runs
-    (the r12 post-snapshot bench saw CORRECTNESS_r12.json already on disk
-    and wrote BENCH_r13_full.json for a record whose own "n" said 12,
-    VERDICT r12 #4), while PROGRESS alone mislabels a bench run at the
-    START of round N+1 before the driver appends any round-(N+1) line
-    (ADVICE r13 — the mirror image). When the two disagree the LARGER
-    wins (a stale source can only under-state the round; CORRECTNESS
-    files are committed at round end, PROGRESS lines throughout, so
-    whichever has ticked is the fresher evidence) and the disagreement is
-    surfaced on stderr. The label is also stamped INTO the record as
-    "round_label" so the filename and the contents cannot diverge
-    silently."""
-    progress = None
-    try:
-        with open(os.path.join(_repo_root(), "PROGRESS.jsonl")) as f:
-            lines = [ln for ln in f.read().splitlines() if ln.strip()]
-        if lines:
-            rnd = json.loads(lines[-1]).get("round")
-            if isinstance(rnd, int):
-                progress = rnd
-    except (OSError, json.JSONDecodeError):
-        pass
-    ns = []
-    for f in os.listdir(_repo_root()):
-        m = re.match(r"CORRECTNESS_r(\d+)\.json$", f)
-        if m:
-            ns.append(int(m.group(1)))
-    fallback = max(ns) + 1 if ns else None
-    if progress is None:
-        return fallback
-    if fallback is not None and fallback != progress:
-        print(
-            f"bench: round label sources disagree (PROGRESS.jsonl says "
-            f"{progress}, latest CORRECTNESS+1 says {fallback}); using "
-            f"{max(progress, fallback)}",
-            file=sys.stderr,
-        )
-        return max(progress, fallback)
-    return progress
 
 
 def main() -> None:
@@ -722,20 +673,9 @@ def main() -> None:
         "unit": "sec",
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
     }
-    # self-contained per-round copy (VERDICT r11 #4: the driver's
-    # BENCH_r{N}.json keeps only a truncated stdout tail; this file makes
-    # the full record addressable by round without BENCH.json archaeology).
-    # round_label rides INSIDE the record too, so the filename and the
-    # contents share one source of truth (the r12 off-by-one fix)
-    rnd = _infer_round()
-    if rnd is not None:
-        record["round_label"] = rnd
     line = json.dumps(record)
     with open(os.path.join(_repo_root(), "BENCH.json"), "w") as f:
         f.write(line + "\n")
-    if rnd is not None:
-        with open(os.path.join(_repo_root(), f"BENCH_r{rnd:02d}_full.json"), "w") as f:
-            f.write(line + "\n")
     print(line)
     spark.stop()
 

@@ -8,9 +8,15 @@ sizing changes — operator code is identical.
 
 from __future__ import annotations
 
+import logging
 import os
+import re
 
 from pyspark.sql import SparkSession
+
+log = logging.getLogger(__name__)
+
+_UNITS = {"": 2**20, "k": 2**10, "m": 2**20, "g": 2**30, "t": 2**40}
 
 
 def ensure_min_partitions(df, minimum: int | None = None):
@@ -64,15 +70,55 @@ def ensure_min_partitions(df, minimum: int | None = None):
     return df
 
 
+def host_memory() -> tuple[int, int]:
+    """``(limit, mem_total)`` in bytes: the limit is the cgroup v2
+    ``memory.max`` when it is set and finite, else ``MemAvailable``."""
+    info = {}
+    with open("/proc/meminfo") as f:
+        for line in f:
+            key, val = line.split(":", 1)
+            info[key] = int(val.split()[0]) * 1024
+    limit = info["MemAvailable"]
+    try:
+        with open("/sys/fs/cgroup/memory.max") as f:
+            raw = f.read().strip()
+        if raw != "max":
+            limit = int(raw)
+    except (OSError, ValueError):
+        pass
+    return limit, info["MemTotal"]
+
+
+def driver_heap(limit: int, mem_total: int, heap: str | None = None) -> tuple[str, str]:
+    """``(spark.driver.memory, driver JVM flags)`` for a host with a memory
+    limit of ``limit`` bytes and ``mem_total`` bytes of RAM.
+
+    ``heap`` is an explicit size such as ``"6g"``; by default the heap is
+    40% of the limit in whole GiB, between 1g and 16g. The heap is fixed
+    (``-Xms`` == ``-Xmx``) and, unless it is more than half of RAM, where
+    touching every page up front could starve the host, pre-touched.
+    """
+    if heap is None:
+        heap = f"{min(16, max(1, limit * 2 // 5 // 2**30))}g"
+    m = re.fullmatch(r"(\d+)([kmgt]?)b?", heap.strip().lower())
+    heap_bytes = int(m.group(1)) * _UNITS[m.group(2)] if m else 0
+    opts = f"-Xms{heap}"
+    if heap_bytes <= mem_total // 2:
+        opts += " -XX:+AlwaysPreTouch"
+    return heap, opts
+
+
 def get_spark(app_name: str = "hbsir_old_spark", shuffle_partitions: int | None = None) -> SparkSession:
     """Build (or reuse) a SparkSession with engine defaults.
 
     AQE handles runtime coalescing and skew joins; shuffle partitions default
     to the local core count (not Spark's 200) so small-SF local runs don't
     drown in empty tasks. On a real cluster, set ``HBSIR_SPARK_SHUFFLE`` to
-    ~2-3x total cores.
+    ~2-3x total cores. The core count defaults to the CPUs this process may
+    run on (``SPARK_GRAFT_CPUS`` overrides it) and the driver heap to
+    :func:`driver_heap` of :func:`host_memory`.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 8
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
     if shuffle_partitions is None:
         shuffle_partitions = int(os.environ.get("HBSIR_SPARK_SHUFFLE", cpus))
     # glibc malloc tuning for the executor JVM (must be in the environment
@@ -91,30 +137,33 @@ def get_spark(app_name: str = "hbsir_old_spark", shuffle_partitions: int | None 
     # by the arenas' high-water mark, which Spark's page accounting caps.
     os.environ.setdefault("MALLOC_MMAP_THRESHOLD_", "268435456")
     os.environ.setdefault("MALLOC_TRIM_THRESHOLD_", "268435456")
-    # Fixed, pre-touched heap (r14, measured): the catastrophic "storm"
-    # windows (30-90 s walls with ~20 of 32 cores in KERNEL time on an
-    # otherwise-quiet guest) correlate exactly with driver-JVM RSS GROWTH
-    # phases — G1 committing/faulting fresh heap pages (and uncommitting
-    # them again after cycles) under a memory-overcommitted hypervisor,
-    # where every new-page touch is an exit + host-side reclaim. With the
-    # old 48g cap the heap ballooned with garbage between rare old-gen
-    # collections (RSS 13 -> 41 GiB across four x38b repeats, sys 18-25
-    # cores, repeats 28-84 s); a forced System.gc() that collapsed RSS
-    # ended the storm instantly, and a FIXED pre-touched heap removes the
-    # mechanism outright: -Xms == -Xmx plus AlwaysPreTouch pays every page
-    # fault once at session start, so steady state has ZERO heap
-    # commit/uncommit traffic. Same x38b repeat loop after the change:
-    # 5-15 s per round, sys <= 5 cores, RSS pinned. 16g (not 48g) keeps
-    # the pinned footprint modest and makes old-gen collections frequent
+    # Fixed, pre-touched heap (measured on a 32-core host): the
+    # catastrophic "storm" windows (30-90 s walls with ~20 of 32 cores in
+    # KERNEL time on an otherwise-quiet guest) correlate exactly with
+    # driver-JVM RSS GROWTH phases — G1 committing/faulting fresh heap
+    # pages (and uncommitting them again after cycles) under a
+    # memory-overcommitted hypervisor, where every new-page touch is an
+    # exit + host-side reclaim. With a 48g cap the heap ballooned with
+    # garbage between rare old-gen collections (RSS 13 -> 41 GiB across
+    # four x38b repeats, sys 18-25 cores, repeats 28-84 s); a forced
+    # System.gc() that collapsed RSS ended the storm instantly, and a
+    # FIXED pre-touched heap removes the mechanism outright: -Xms == -Xmx
+    # plus AlwaysPreTouch pays every page fault once at session start, so
+    # steady state has ZERO heap commit/uncommit traffic (same x38b repeat
+    # loop after the change: 5-15 s per round, sys <= 5 cores, RSS
+    # pinned). A modest heap also makes old-gen collections frequent
     # enough that ContextCleaner's weak-ref reaping of dropped
     # localCheckpoint blocks actually runs; GC itself is parallel USER
-    # time, orders cheaper than the kernel storms. Production overrides:
-    # HBSIR_SPARK_DRIVER_MEM sizes the heap, HBSIR_SPARK_DRIVER_JAVAOPTS
-    # replaces the flag set entirely.
-    driver_mem = os.environ.get("HBSIR_SPARK_DRIVER_MEM", "16g")
-    driver_javaopts = os.environ.get(
-        "HBSIR_SPARK_DRIVER_JAVAOPTS", f"-Xms{driver_mem} -XX:+AlwaysPreTouch"
+    # time, orders cheaper than the kernel storms. The size comes from the host
+    # (see driver_heap): a fixed 16g cannot even be committed on a 15 GiB
+    # host. HBSIR_SPARK_DRIVER_MEM sizes the heap, and
+    # HBSIR_SPARK_DRIVER_JAVAOPTS replaces the flag set entirely.
+    driver_mem, driver_javaopts = driver_heap(
+        *host_memory(), os.environ.get("HBSIR_SPARK_DRIVER_MEM")
     )
+    driver_javaopts = os.environ.get("HBSIR_SPARK_DRIVER_JAVAOPTS", driver_javaopts)
+    if SparkSession.getActiveSession() is None:
+        log.info("driver heap %s (%s), %s cores", driver_mem, driver_javaopts, cpus)
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)

@@ -1,8 +1,7 @@
-"""Pins for bench.py's storm-proofing machinery (VERDICT r11 #1): the
-per-query quiet gate, the committed-quiet-reference yardstick, and the
-round inference behind the self-contained BENCH_r{N}_full.json. These are
-pure-Python (no Spark session) — the timed loop itself is exercised by the
-per-round bench runs."""
+"""Pins for bench.py's storm-proofing machinery: the per-query quiet gate,
+the retake loop, the committed-quiet-reference yardstick, the headline
+registry and the external-load meter. These are pure-Python (no Spark
+session) — the timed loop itself is exercised by running bench.py."""
 
 import json
 
@@ -35,33 +34,6 @@ class TestQuietReference:
         ref = 0.3
         assert not (0.69 > 1.5 * ref + 0.25)  # 2.3x on a 0.3 s query: jitter
         assert 4.0 > 1.5 * 2.0 + 0.25  # 2x on a 2 s query: trips
-
-
-class TestRoundInference:
-    def test_infer_round_tracks_progress_jsonl(self):
-        # ONE source of truth (VERDICT r12 #4): the driver's own latest
-        # "round" field in PROGRESS.jsonl — the old latest-CORRECTNESS+1
-        # rule wrote BENCH_r13_full.json for a record whose "n" said 12
-        with open(bench._repo_root() + "/PROGRESS.jsonl") as f:
-            last = json.loads([ln for ln in f if ln.strip()][-1])
-        rnd = bench._infer_round()
-        assert rnd == last["round"] >= 13
-
-    def test_infer_round_prefers_larger_source_on_disagreement(
-        self, tmp_path, monkeypatch
-    ):
-        # ADVICE r13: trusting PROGRESS.jsonl unconditionally mislabels a
-        # bench run at the START of round N+1 before the driver appends
-        # any round-(N+1) line — cross-check against latest-CORRECTNESS+1
-        # and prefer the larger (a stale source only under-states)
-        (tmp_path / "PROGRESS.jsonl").write_text('{"round": 13}\n')
-        (tmp_path / "CORRECTNESS_r13.json").write_text("{}")
-        monkeypatch.setattr(bench, "_repo_root", lambda: str(tmp_path))
-        assert bench._infer_round() == 14  # stale last progress line
-        # converse: driver-initiated mid-round run before the round's own
-        # CORRECTNESS file exists — PROGRESS is the fresher source
-        (tmp_path / "PROGRESS.jsonl").write_text('{"round": 15}\n')
-        assert bench._infer_round() == 15
 
 
 class TestRetakeLoop:

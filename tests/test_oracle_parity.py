@@ -87,306 +87,28 @@ def test_rows_only_queries_run(name, spark, sf_dir):
     assert df.count() >= 0
 
 
-def test_every_oracle_key_has_a_query():
-    """Guard the two hand-maintained dicts against drift: every oracle must
-    pair with a query, and the rows-only set is exactly the pinned
-    in-window set (ONE source of truth — a second hardcoded copy here
-    drifted when x45 landed, so it asserts the shared constant now;
-    test_rows_only_pin_matches_oracle_registry checks the same equality
-    from the window side)."""
-    assert set(ORACLES) <= set(QUERIES)
-    assert set(QUERIES) - set(ORACLES) == ROWS_ONLY_PINNED_IN_WINDOW
-
-
-# The correctness driver records rows for only the first 50 entries of
-# queries() (r2: 51 registered -> 50 rows; r3: 57 -> first 50). These pins
-# enforce the rotation policy:
-#  (a) gates whose latest green row is 3 rounds stale (would go 4+ if
-#      skipped again) plus brand-new gates sit inside the recorded
-#      window — for r15 that is the 6 r11-green veterans deferred by the
-#      r14 arithmetic (o1/f3/p4/p17/p23/x16, first in line per the r14
-#      header's promise);
-#  (b) rows-only gates (approximate by design, no oracle) NEVER rotate out
-#      -- the driver's only evidence for them is the per-round spark_rows
-#      record, so parking them past the cap would erase all driver
-#      evidence for them;
-#  (c) only FULL-ORACLE gates with a green (hash-matched) driver row may
-#      sit past position 50. Round 15: the window holds the 6 r11-green
-#      leads + 4 r13-green gates pulled one round early (s8/x41/x44/x35
-#      — operators semantically rewritten in r14; VERDICT r14 #9 asks
-#      for driver-side oracle confirmation of the rewrites) + 30 of the
-#      40 r12-green veterans (including the other rewritten operators
-#      x36/x25/g7/x30) + 10 rows-only = 50; the arithmetic defers 10
-#      from the r12-green set — p7/p8/p19/f1/f2/a8/a9/l8/x24/j8b, the
-#      thinnest wrappers over native Spark ops (projection / CASE chain
-#      / native pivot / filter / select / rollup / grouping sets / ORC
-#      roundtrip / one-window budget / 25-row dim analytics), chosen
-#      because their plans haven't changed in 6+ rounds and every parity
-#      run re-proves them exact against DuckDB. They sit last in the
-#      tail and are FIRST in line for r16, together with the 36
-#      remaining r13-green veterans (2 rounds stale by then).
-R11_STALE_LEADS = {
-    # the r14-deferred r11-green veterans, 3 rounds stale — positions 0-5
-    "o1_top_k",
-    "f3_distinct",
-    "p4_string_scrub",
-    "p17_map_lookup",
-    "p23_json_extract",
-    "x16_hash_split",
-}
-R13_PULLED_REWRITTEN = {
-    # r13-green, pulled one round early: r14 rewrote their operators
-    "s8_funnel",
-    "x41_substring_dedup",
-    "x44_pipeline_e2e",
-    "x35_perplexity_prune",
-}
-R12_RETURNING = {
-    # 30 returning r12-green veterans (2 rounds stale, owed priority)
-    "x47_audio_decode",
-    "p24_interval_binning",
-    "g7_income_brackets",
-    "x36_boilerplate_removal",
-    "x37_context_chunking",
-    "x18_token_freq",
-    "x5_text_stats",
-    "p18_melt",
-    "w3_quantile_by_variable",
-    "l3_real_corpus_food",
-    "l4_real_household_decode",
-    "x23_best_rep_dedup",
-    "l5_real_occupation_classification",
-    "l6_local_override_decode",
-    "g4_real_weighted_report",
-    "g5_real_isc_summary",
-    "x25_repetition_filter",
-    "x26_kmeans_planted",
-    "x27_semantic_dedup",
-    "x28_sequence_pack",
-    "x29_temperature_sample",
-    "x30_lm_perplexity",
-    "l10_salted_skew_join",
-    "l11_partitioned_write",
-    "l12_real_duration_aspect",
-    "g2_training_pipeline",
-    "l15_full_span_food",
-    "l17_real_income_chain",
-    "l18_real_outlay_chain",
-    "x33_quality_classifier",
-}
-SCHEDULED_FULL_ORACLE = R11_STALE_LEADS | R13_PULLED_REWRITTEN | R12_RETURNING
-# approximate-by-design gates: spark_rows is their only driver record
-ROWS_ONLY_PINNED_IN_WINDOW = {
-    "x3_minhash_lsh",
-    "x4_simhash_pairs",
-    "x9_ann_lsh",
-    "x13_ivf_topk",
+# approximate by design: these gates have no exact oracle and are only run
+ROWS_ONLY = {
     "a7_approx_distinct",
     "w4_approx_decile",
     "w4b_weighted_approx_decile",
+    "x13_ivf_topk",
     "x38b_curation_fuzzy_lsh",
+    "x3_minhash_lsh",
     "x42_pq_topk",
     "x45_bpe_learned",
+    "x4_simhash_pairs",
+    "x9_ann_lsh",
 }
-# the 36 gates with green rows in CORRECTNESS_r13.json still in the tail
-# (s8/x41/x44/x35 pulled into the r15 window) — r16 window priority
-R13_GREEN = {
-    "x48_resize_nearest",
-    "x48b_resize_bilinear",
-    "x49_image_dedup",
-    "x50_multimodal_capstone",
-    "s9_retention",
-    "s10_stream_funnel",
-    "s11_path_trigrams",
-    "x45b_bpe_encode",
-    "j10_local_supplier_revenue",
-    "x46_corpus_refresh",
-    "x43_global_shuffle",
-    "x42b_pq_encode",
-    "x38_curation_fuzzy",
-    "g5b_isc_summary_1401",
-    "x39_gopher_rules",
-    "x40_c4_filter",
-    "g8_isc_decile_table",
-    "s5_batch_sessions",
-    "x12_embedding_dedup",
-    "w1_weighted_ecdf",
-    "w2_decile",
-    "p13_cpi_deflation",
-    "x11_bpe_token_count",
-    "g1_dsl_pipeline",
-    "l1_form_raw_vs_cleaned",
-    "p16_id_digit_extraction",
-    "l7_jsonl_ingest",
-    "p11_season_derivation",
-    "l16_monthly_cpi_chain",
-    "g6_poverty_rate",
-    "l15b_partitioned_span",
-    "j8_geometry_join",
-    "s4_upsert_sink",
-    "x21_asof_attribution",
-    "s3_events_sliding",
-    "x31_dsir_select",
-}
-# the 40 gates rowed green in CORRECTNESS_r14.json — 1 round fresh,
-# normal rotation (the r14 window: 4 then-displaced r10-green + 2 new +
-# 34 returning r11-green)
-R14_GREEN = {
-    "u1_union_missing_columns",
-    "a6_distinct_agg",
-    "a10_cube",
-    "o2_rolling_window",
-    "x51_image_near_dedup",
-    "x52_audio_near_dedup",
-    "x44b_pipeline_fuzzy",
-    "x22b_bloom_dedup",
-    "a2_household_math",
-    "a4_average_table",
-    "a5_weighted_sum",
-    "g3_report_pivot_totals",
-    "j1_classification_join",
-    "j2_dim_join_chain",
-    "j3_weighted_average",
-    "j6_fact_join",
-    "j9_semi_anti",
-    "l2_setup_roundtrip",
-    "l13_real_cpi_chain",
-    "l14_multi_year_food",
-    "s1_events_tumbling",
-    "s2_events_sessions",
-    "x1_dedup_exact",
-    "x2_ngram_jaccard",
-    "x6_lang_id",
-    "x7_rolling_fingerprint",
-    "x8_cosine_topk",
-    "x14_text_cleaning",
-    "x15_contamination_flag",
-    "x17_group_quota",
-    "x19_dup_clusters",
-    "x20_tfidf_top_terms",
-    "x22_incremental_dedup",
-    "x32_dup_windows",
-    "x34_curation_pipeline",
-    "s6_interval_join",
-    "x10_multimodal_features",
-    "s7_stream_dedup",
-    "l9_bucketed_join",
-    "a1_groupby_sum",
-}
-# the 10 r12-green veterans deferred by this round's window arithmetic —
-# latest green row r12 (2 rounds stale), FIRST in line for the r16 window
-DISPLACED_R12_GREEN = {
-    "p7_computed_column",
-    "p8_category_conditions",
-    "p19_pivot",
-    "f1_filter_predicates",
-    "f2_attribute_select",
-    "a8_rollup",
-    "a9_grouping_sets",
-    "l8_orc_roundtrip",
-    "x24_token_budget",
-    "j8b_geometry_analytics",
-}
-ROTATED_VETERANS = R13_GREEN | R14_GREEN | DISPLACED_R12_GREEN
 
 
-def test_driver_cap_ordering():
-    first50 = set(list(QUERIES)[:50])
-    missing = SCHEDULED_FULL_ORACLE - first50
-    assert not missing, f"owed gates outside the driver's 50-row window: {missing}"
-    ro_missing = ROWS_ONLY_PINNED_IN_WINDOW - first50
-    assert not ro_missing, (
-        f"rows-only gates must never rotate out (spark_rows is their only "
-        f"driver record): {ro_missing}"
-    )
-    tail = set(list(QUERIES)[50:])
-    assert tail <= ROTATED_VETERANS, (
-        f"only full-oracle gates with a green previous-round row may sit "
-        f"past position 50: {tail - ROTATED_VETERANS}"
-    )
-    # the window ledger must ADD UP (the r9/r10 headers both drifted on
-    # this arithmetic; the judge recomputes it every round): 6 stale
-    # leads + 4 pulled rewrites + 30 returning + 10 rows-only = exactly
-    # the 50 recorded slots
-    assert first50 == (SCHEDULED_FULL_ORACLE | ROWS_ONLY_PINNED_IN_WINDOW)
-    assert tail == ROTATED_VETERANS
-    # the six 3-rounds-stale veterans lead the window
-    assert list(QUERIES)[:6] == [
-        "o1_top_k",
-        "f3_distinct",
-        "p4_string_scrub",
-        "p17_map_lookup",
-        "p23_json_extract",
-        "x16_hash_split",
-    ]
-
-
-def test_cross_round_ledger_freshness():
-    """The rotation policy's cross-round invariant, automated (VERDICT r13
-    #5 — previously it lived only in verdict prose): over ALL committed
-    CORRECTNESS_r*.json records, every gate's LATEST row must be green
-    (full-oracle: rows+schema+hash matched, no err; rows-only: spark_rows
-    recorded under the by-design 'no_oracle' marker), and any full-oracle
-    gate whose latest row is more than 2 rounds older than the newest
-    record — i.e. would go 4+ rounds stale if skipped again — must sit
-    INSIDE the current 50-row window so the coming round rows it. A gate
-    with no record at all (brand new) must likewise be scheduled. This is
-    exactly the debt-must-be-scheduled rule the queries() header argues in
-    prose; here it fails the suite instead of waiting for a judge to
-    recompute it."""
-    import glob
-    import json
-    import re
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    latest: dict[str, tuple[int, dict]] = {}
-    rounds = []
-    for path in sorted(glob.glob(os.path.join(repo, "CORRECTNESS_r*.json"))):
-        rnum = int(re.search(r"_r(\d+)", os.path.basename(path)).group(1))
-        rounds.append(rnum)
-        with open(path) as fh:
-            for gate, rec in json.load(fh).items():
-                prev = latest.get(gate)
-                if prev is None or rnum >= prev[0]:
-                    latest[gate] = (rnum, rec)
-    assert rounds, "no CORRECTNESS records found"
-    newest = max(rounds)
-    first50 = set(list(QUERIES)[:50])
-    problems = []
-    for gate in QUERIES:
-        if gate not in latest:
-            if gate not in first50:
-                problems.append(f"{gate}: new gate not scheduled in the window")
-            continue
-        rnum, rec = latest[gate]
-        if gate in ORACLES:
-            green = (
-                rec.get("rows_match")
-                and rec.get("schema_match")
-                and rec.get("hash_match")
-                and not rec.get("err")
-            )
-            if not green:
-                problems.append(f"{gate}: latest row (r{rnum}) not green: {rec}")
-            if rnum < newest - 2 and gate not in first50:
-                problems.append(
-                    f"{gate}: latest green row r{rnum} vs newest record "
-                    f"r{newest} — stale debt not scheduled in the window"
-                )
-        else:
-            if rec.get("err") != "no_oracle" or rec.get("spark_rows") is None:
-                problems.append(
-                    f"{gate}: rows-only gate's latest row (r{rnum}) is not a "
-                    f"clean no_oracle row-count record: {rec}"
-                )
-    assert not problems, "\n".join(problems)
-
-
-def test_rows_only_pin_matches_oracle_registry():
-    """The pinned rows-only set is exactly the set of gates without an
-    oracle — a new oracle-less gate must be added to the pin (and kept in
-    the window), and a gate that gains an oracle must leave it."""
-    assert ROWS_ONLY_PINNED_IN_WINDOW == set(QUERIES) - set(ORACLES)
+def test_every_oracle_key_has_a_query():
+    """Guard the two hand-maintained dicts against drift: every oracle pairs
+    with a query, and the queries without an oracle are exactly the
+    rows-only set — a new oracle-less gate must be added to it, and a gate
+    that gains an oracle must leave it."""
+    assert set(ORACLES) <= set(QUERIES)
+    assert set(QUERIES) - set(ORACLES) == ROWS_ONLY
 
 
 def test_entry_imports_in_bare_interpreter():

@@ -1,9 +1,9 @@
-"""Optimization-round measurement helper: capture `.explain("formatted")`
-plans and noop-sink timings for declared queries.
+"""Measurement helper: capture `.explain("formatted")` plans and noop-sink
+timings for declared queries.
 
 Usage:
-    python tools/plan_capture.py --suffix before --out plans/r14 q1 q2 ...
-    python tools/plan_capture.py --time --iters 3 q1 q2 ...
+    python tools/plan_capture.py --suffix before --out plans/<label> q1 q2 ...
+    python tools/plan_capture.py --time --iters 3 --out plans/<label> q1 q2 ...
 
 Plans go to <out>/<name>_<suffix>.txt; timings print one JSON line.
 The noop sink computes every row/column (guide §1.4); jobs are labeled
@@ -32,13 +32,13 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("names", nargs="+")
     ap.add_argument("--suffix", default=None, help="write plans with this suffix")
-    ap.add_argument("--out", default="plans/r14")
+    ap.add_argument("--out", required=True, help="directory for captured plans")
     ap.add_argument("--time", action="store_true")
     ap.add_argument("--iters", type=int, default=3)
     ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     args = ap.parse_args()
 
-    spark = get_spark("plan-capture-r14")
+    spark = get_spark("plan-capture")
     queries = {**entry_mod.queries(), **entry_mod.bench_only_queries()}
     timings: dict[str, float] = {}
     colds: dict[str, float] = {}
