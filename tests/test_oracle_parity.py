@@ -104,10 +104,14 @@ ROWS_ONLY = {
 
 def test_every_oracle_key_has_a_query():
     """Guard the two hand-maintained dicts against drift: every oracle pairs
-    with a query, and the queries without an oracle are exactly the
-    rows-only set — a new oracle-less gate must be added to it, and a gate
-    that gains an oracle must leave it."""
+    with a query."""
     assert set(ORACLES) <= set(QUERIES)
+
+
+def test_rows_only_pin_matches_oracle_registry():
+    """The queries without an oracle are exactly the rows-only set — a new
+    oracle-less gate must be added to it, and a gate that gains an oracle
+    must leave it."""
     assert set(QUERIES) - set(ORACLES) == ROWS_ONLY
 
 
