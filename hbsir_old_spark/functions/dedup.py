@@ -45,17 +45,25 @@ def word_shingles(col: Column | str, n: int = 3) -> Column:
     This is the ARRAY form (per-doc distinct set) for callers that need
     the whole set per row — exact Jaccard, MinHash signatures. Pipelines
     that immediately ``explode`` the grams should use
-    :func:`exploded_word_shingles` instead: building the array via the
-    interpreted ``transform`` lambda costs ~9x the codegen'd
-    explode-positions formulation (measured at sf0.1, round 8)."""
+    :func:`exploded_word_shingles` instead: it builds each gram in
+    codegen'd ``slice``/``concat_ws`` where this form runs an interpreted
+    ``transform`` lambda per gram. The token array is bound once, as the
+    one element of a ``transform`` over a singleton array, so the cost is
+    linear in the document's length: referring to the tokenizing
+    expression inside the gram lambda would re-normalize and re-split the
+    whole text once per gram."""
     col = F.col(col) if isinstance(col, str) else col
-    tokens = F.split(normalize_text(col), " ")
-    count = F.greatest(F.size(tokens) - (n - 1), F.lit(1))
-    grams = F.transform(
-        F.sequence(F.lit(1), count),
-        lambda i: F.concat_ws(" ", F.slice(tokens, i, n)),
-    )
-    return F.array_distinct(grams)
+
+    def grams(tokens: Column) -> Column:
+        count = F.greatest(F.size(tokens) - (n - 1), F.lit(1))
+        return F.array_distinct(
+            F.transform(
+                F.sequence(F.lit(1), count),
+                lambda i: F.concat_ws(" ", F.slice(tokens, i, n)),
+            )
+        )
+
+    return F.transform(F.array(F.split(normalize_text(col), " ")), grams)[0]
 
 
 # exploded_word_shingles lives in text.py (text cannot import dedup —
@@ -710,20 +718,6 @@ def minhash_lsh_pairs(
     # PER SIDE (verified: 2 parquet scans in the un-checkpointed plan).
     # banded is tiny — (id, band, hash) per doc per band — so the
     # checkpoint is cheap and halves the dominant signature cost.
-    #
-    # Round-7 answer to the round-6 "~30 s cold" flag: stage-level timing
-    # on a GENUINELY quiet host (sf0.1, fresh JVM) measures cold =
-    # signature exec ~6.9 s (this checkpoint's materialization: shingle
-    # explode + hash + groupBy-min + first-run codegen) + band self-join
-    # ~1.0 s + candidate verify ~2.3 s ≈ 11-13 s total, warm 2.8-3.8 s.
-    # The 30-34 s cold readings (driver r6 record AND the quiet-start
-    # probe) reproduce only under concurrent host load — repeated solo
-    # runs show 60-190 s outliers in bursts that end abruptly mid-process
-    # while adjacent runs take ~3 s, the signature of external contention
-    # windows arriving after the quiet-gate check passed. No plan change
-    # occurred between r5 and r6 on this path; the r7 codegen shingle
-    # rewrite (explode positions + slice/concat_ws, see exploded above)
-    # further cuts the signature stage's expression cost ~5x.
     banded = banded.localCheckpoint(eager=True)
     if hot_bucket_cap is not None:
         # one partial agg over the (tiny) checkpointed band table; the

@@ -10,13 +10,10 @@ from __future__ import annotations
 
 import logging
 import os
-import re
 
 from pyspark.sql import SparkSession
 
 log = logging.getLogger(__name__)
-
-_UNITS = {"": 2**20, "k": 2**10, "m": 2**20, "g": 2**30, "t": 2**40}
 
 
 def ensure_min_partitions(df, minimum: int | None = None):
@@ -70,9 +67,9 @@ def ensure_min_partitions(df, minimum: int | None = None):
     return df
 
 
-def host_memory() -> tuple[int, int]:
-    """``(limit, mem_total)`` in bytes: the limit is the cgroup v2
-    ``memory.max`` when it is set and finite, else ``MemAvailable``."""
+def host_memory() -> int:
+    """The memory limit in bytes: the cgroup v2 ``memory.max`` when it is
+    set and finite, else ``MemAvailable``."""
     info = {}
     with open("/proc/meminfo") as f:
         for line in f:
@@ -86,26 +83,14 @@ def host_memory() -> tuple[int, int]:
             limit = int(raw)
     except (OSError, ValueError):
         pass
-    return limit, info["MemTotal"]
+    return limit
 
 
-def driver_heap(limit: int, mem_total: int, heap: str | None = None) -> tuple[str, str]:
-    """``(spark.driver.memory, driver JVM flags)`` for a host with a memory
-    limit of ``limit`` bytes and ``mem_total`` bytes of RAM.
-
-    ``heap`` is an explicit size such as ``"6g"``; by default the heap is
-    40% of the limit in whole GiB, between 1g and 16g. The heap is fixed
-    (``-Xms`` == ``-Xmx``) and, unless it is more than half of RAM, where
-    touching every page up front could starve the host, pre-touched.
-    """
-    if heap is None:
-        heap = f"{min(16, max(1, limit * 2 // 5 // 2**30))}g"
-    m = re.fullmatch(r"(\d+)([kmgt]?)b?", heap.strip().lower())
-    heap_bytes = int(m.group(1)) * _UNITS[m.group(2)] if m else 0
-    opts = f"-Xms{heap}"
-    if heap_bytes <= mem_total // 2:
-        opts += " -XX:+AlwaysPreTouch"
-    return heap, opts
+def driver_heap(limit: int) -> str:
+    """The driver heap cap (``spark.driver.memory``, i.e. ``-Xmx``) for a
+    host with a memory limit of ``limit`` bytes: 40% of it in whole GiB,
+    between 1g and 16g."""
+    return f"{min(16, max(1, limit * 2 // 5 // 2**30))}g"
 
 
 def get_spark(app_name: str = "hbsir_old_spark", shuffle_partitions: int | None = None) -> SparkSession:
@@ -115,8 +100,10 @@ def get_spark(app_name: str = "hbsir_old_spark", shuffle_partitions: int | None 
     to the local core count (not Spark's 200) so small-SF local runs don't
     drown in empty tasks. On a real cluster, set ``HBSIR_SPARK_SHUFFLE`` to
     ~2-3x total cores. The core count defaults to the CPUs this process may
-    run on (``SPARK_GRAFT_CPUS`` overrides it) and the driver heap to
-    :func:`driver_heap` of :func:`host_memory`.
+    run on (``SPARK_GRAFT_CPUS`` overrides it). The driver heap cap defaults
+    to :func:`driver_heap` of :func:`host_memory` (``HBSIR_SPARK_DRIVER_MEM``
+    overrides it); no driver JVM flags are set unless
+    ``HBSIR_SPARK_DRIVER_JAVAOPTS`` gives them.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
     if shuffle_partitions is None:
@@ -137,33 +124,12 @@ def get_spark(app_name: str = "hbsir_old_spark", shuffle_partitions: int | None 
     # by the arenas' high-water mark, which Spark's page accounting caps.
     os.environ.setdefault("MALLOC_MMAP_THRESHOLD_", "268435456")
     os.environ.setdefault("MALLOC_TRIM_THRESHOLD_", "268435456")
-    # Fixed, pre-touched heap (measured on a 32-core host): the
-    # catastrophic "storm" windows (30-90 s walls with ~20 of 32 cores in
-    # KERNEL time on an otherwise-quiet guest) correlate exactly with
-    # driver-JVM RSS GROWTH phases — G1 committing/faulting fresh heap
-    # pages (and uncommitting them again after cycles) under a
-    # memory-overcommitted hypervisor, where every new-page touch is an
-    # exit + host-side reclaim. With a 48g cap the heap ballooned with
-    # garbage between rare old-gen collections (RSS 13 -> 41 GiB across
-    # four x38b repeats, sys 18-25 cores, repeats 28-84 s); a forced
-    # System.gc() that collapsed RSS ended the storm instantly, and a
-    # FIXED pre-touched heap removes the mechanism outright: -Xms == -Xmx
-    # plus AlwaysPreTouch pays every page fault once at session start, so
-    # steady state has ZERO heap commit/uncommit traffic (same x38b repeat
-    # loop after the change: 5-15 s per round, sys <= 5 cores, RSS
-    # pinned). A modest heap also makes old-gen collections frequent
-    # enough that ContextCleaner's weak-ref reaping of dropped
-    # localCheckpoint blocks actually runs; GC itself is parallel USER
-    # time, orders cheaper than the kernel storms. The size comes from the host
-    # (see driver_heap): a fixed 16g cannot even be committed on a 15 GiB
-    # host. HBSIR_SPARK_DRIVER_MEM sizes the heap, and
-    # HBSIR_SPARK_DRIVER_JAVAOPTS replaces the flag set entirely.
-    driver_mem, driver_javaopts = driver_heap(
-        *host_memory(), os.environ.get("HBSIR_SPARK_DRIVER_MEM")
-    )
-    driver_javaopts = os.environ.get("HBSIR_SPARK_DRIVER_JAVAOPTS", driver_javaopts)
+    # The heap starts at the JVM default and grows on demand up to the cap;
+    # HBSIR_SPARK_DRIVER_MEM overrides the cap.
+    driver_mem = os.environ.get("HBSIR_SPARK_DRIVER_MEM") or driver_heap(host_memory())
+    driver_javaopts = os.environ.get("HBSIR_SPARK_DRIVER_JAVAOPTS")
     if SparkSession.getActiveSession() is None:
-        log.info("driver heap %s (%s), %s cores", driver_mem, driver_javaopts, cpus)
+        log.info("driver heap cap %s, %s cores", driver_mem, cpus)
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -174,7 +140,6 @@ def get_spark(app_name: str = "hbsir_old_spark", shuffle_partitions: int | None 
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", driver_mem)
-        .config("spark.driver.extraJavaOptions", driver_javaopts)
         # reap dropped localCheckpoint/broadcast blocks on a 5 min cadence
         # instead of the 30 min default: ContextCleaner only frees them
         # after a driver GC processes the weak refs, and iterative
@@ -193,6 +158,8 @@ def get_spark(app_name: str = "hbsir_old_spark", shuffle_partitions: int | None 
         .config("spark.storage.memoryMapThreshold", "128m")
         .config("spark.ui.enabled", "false")
     )
+    if driver_javaopts is not None:
+        builder = builder.config("spark.driver.extraJavaOptions", driver_javaopts)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -82,6 +82,16 @@ def test_word_shingles_short_text(spark):
     assert out[1]["sh"] == ["two words"]
 
 
+SHINGLE_DOCS = [
+    (1, "the cat sat on the mat while the cat slept"),
+    (2, "solo"),
+    (3, ""),
+    (4, None),
+    (5, "a b a b a b"),
+    (6, "  Weird   WHITESPACE\tand ΣΙΓΜΑΣ  "),
+]
+
+
 def test_exploded_word_shingles_matches_array_form(spark):
     # the codegen'd exploded twin must agree with the array form as a SET
     # per doc (the exploded form skips per-doc distinct by design) across
@@ -89,17 +99,7 @@ def test_exploded_word_shingles_matches_array_form(spark):
     # -> one '' gram each, repeated grams, unicode normalization
     from hbsir_old_spark.functions.dedup import exploded_word_shingles
 
-    df = spark.createDataFrame(
-        [
-            (1, "the cat sat on the mat while the cat slept"),
-            (2, "solo"),
-            (3, ""),
-            (4, None),
-            (5, "a b a b a b"),
-            (6, "  Weird   WHITESPACE\tand ΣΙΓΜΑΣ  "),
-        ],
-        "doc_id int, text string",
-    )
+    df = spark.createDataFrame(SHINGLE_DOCS, "doc_id int, text string")
     arr = {
         r["doc_id"]: sorted(r["sh"])
         for r in df.select("doc_id", word_shingles("text", 3).alias("sh")).collect()
@@ -111,6 +111,41 @@ def test_exploded_word_shingles_matches_array_form(spark):
     # NULL and empty text both fold to one '' gram in BOTH forms
     # (concat_ws folds the NULL slice to the empty string)
     assert arr[3] == [""] and arr[4] == [""]
+
+
+def test_word_shingles_pinned_output(spark):
+    # exact arrays, order included: grams in first-occurrence order, each
+    # distinct gram once, '' for NULL and empty text
+    expected = {
+        1: [
+            ["the", "cat", "sat", "on", "mat", "while", "slept"],
+            ["solo"],
+            [""],
+            [""],
+            ["a", "b"],
+            ["weird", "whitespace", "and", "σιγμασ"],
+        ],
+        2: [
+            ["the cat", "cat sat", "sat on", "on the", "the mat", "mat while", "while the", "cat slept"],
+            ["solo"],
+            [""],
+            [""],
+            ["a b", "b a"],
+            ["weird whitespace", "whitespace and", "and σιγμασ"],
+        ],
+        3: [
+            ["the cat sat", "cat sat on", "sat on the", "on the mat", "the mat while", "mat while the", "while the cat", "the cat slept"],
+            ["solo"],
+            [""],
+            [""],
+            ["a b a", "b a b"],
+            ["weird whitespace and", "whitespace and σιγμασ"],
+        ],
+    }
+    df = spark.createDataFrame(SHINGLE_DOCS, "doc_id int, text string")
+    for n, want in expected.items():
+        rows = df.orderBy("doc_id").select(word_shingles("text", n).alias("sh")).collect()
+        assert [r["sh"] for r in rows] == want, n
 
 
 def test_exact_dedup_empty(spark):
