@@ -2657,7 +2657,7 @@ GROUP BY 1
 # planted classes x 5 variants (base / stereo-duplicated / polarity-
 # inverted / zeroed-run spot edit / reversed), real WAV containers
 # through the real decode path, banded Hamming join + CC — reusing the
-# x51 machinery verbatim (banded_near_dup_pairs is modality-agnostic).
+# x51 machinery verbatim (image_near_dup_pairs is modality-agnostic).
 # FULL oracle with the x51 SQL skeleton: DuckDB recomputes window
 # energies from the sample generator (no codec), the 32 comparison
 # bits, band packing, the banded candidate rule, popcount, and the

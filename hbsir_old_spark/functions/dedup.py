@@ -24,7 +24,8 @@ code (see _shingle_base_hash).
 from __future__ import annotations
 
 import random
-from typing import Sequence
+from functools import reduce
+from typing import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -328,7 +329,7 @@ def connected_components(
     labels = None
     for it in range(max_iterations):
         if it == 0:
-            # ROUND-1 SPECIALIZATION (r14): the initial labels are the
+            # First-round specialization: the initial labels are the
             # identity (comp[u] = u), so the neighbor-min join degenerates
             # — min over neighbors v of comp[v] is just min(v), and the
             # node set is exactly sym's distinct u (sym carries both edge
@@ -354,7 +355,7 @@ def connected_components(
                     F.least(F.col("comp"), F.coalesce("__nmin__", F.col("comp"))).alias("comp"),
                 )
             )
-        # materialize before the pointer-jump SELF-join (r14, guide §2.4):
+        # materialize before the pointer-jump SELF-join:
         # `stepped` is consumed as both join sides below, and without this
         # the round's neighbor-min join + aggregation re-execute once per
         # side (they read the checkpointed sym/labels RDDs, so no corpus
@@ -502,8 +503,8 @@ def _band_hash_table(
 ) -> DataFrame:
     """Internal: ``(__id__, __band__ struct<band,bh>)`` — the shared
     signature/banding stage of :func:`minhash_lsh_pairs` and
-    :func:`minhash_band_hashes` (extracted verbatim; callers validate
-    the bands/num_perm contract).
+    :func:`minhash_band_hashes`, and the one place that validates their
+    bands/num_perm contract.
 
     One streaming pass over exploded shingles builds the signatures; the
     full shingle table is never cached (a corpus-sized array<string>
@@ -514,6 +515,11 @@ def _band_hash_table(
     array materialization) — duplicates are NOT removed here because
     groupBy-min is duplicate-oblivious; word_shingles' array form (with
     array_distinct) stays for the exact-Jaccard verifies."""
+    if bands <= 0 or num_perm % bands != 0:
+        raise ValueError(
+            f"bands ({bands}) must evenly divide num_perm ({num_perm}); "
+            "otherwise signature rows would be silently dropped"
+        )
     rows_per_band = num_perm // bands
     df = ensure_min_partitions(df)
     tokens = F.split(normalize_text(F.col(text_col)), " ")
@@ -588,11 +594,6 @@ def minhash_band_hashes(
     Deterministic across runs/sessions/clusters (fixed-seed permutation
     constants).
     """
-    if bands <= 0 or num_perm % bands != 0:
-        raise ValueError(
-            f"bands ({bands}) must evenly divide num_perm ({num_perm}); "
-            "otherwise signature rows would be silently dropped"
-        )
     banded = _band_hash_table(df, id_col, text_col, n, num_perm, bands)
     return banded.select(
         F.col("__id__").alias(id_col),
@@ -601,16 +602,103 @@ def minhash_band_hashes(
     )
 
 
+def _hot_buckets(
+    bands: DataFrame,
+    keys: Sequence[str],
+    id_col: str,
+    cap: int | None,
+    anchors: int,
+    checkpoint: bool = False,
+) -> tuple[DataFrame, DataFrame | None, DataFrame | None]:
+    """``(cold, hot, anchor_rows)`` of a band table under
+    :func:`band_candidates`' rule: rows of buckets (equal ``keys``) of at
+    most ``cap`` members, rows of larger buckets, and each hot bucket's
+    ``anchors`` smallest-``id_col`` rows; ``cap=None`` gives
+    ``(bands, None, None)``. ``checkpoint`` materializes the size-joined
+    table for callers that read it more than twice."""
+    if cap is not None and cap < 1:
+        raise ValueError(f"hot_bucket_cap must be >= 1 or None, got {cap}")
+    if anchors < 1:
+        raise ValueError(f"hot_bucket_anchors must be >= 1, got {anchors}")
+    if cap is None:
+        return bands, None, None
+    # one partial agg; the size join shuffles on the bucket key that the
+    # candidate join needs anyway
+    sizes = bands.groupBy(*keys).agg(F.count("*").alias("__bsz__"))
+    with_sz = bands.join(sizes, list(keys))
+    if checkpoint:
+        with_sz = with_sz.localCheckpoint(eager=True)
+    cold = with_sz.filter(F.col("__bsz__") <= cap).drop("__bsz__")
+    hot = with_sz.filter(F.col("__bsz__") > cap).drop("__bsz__")
+    anchor_rows = salted_limit_per_group(hot, keys, [F.col(id_col)], anchors, id_col)
+    return cold, hot, anchor_rows
+
+
+def band_candidates(
+    bands: DataFrame,
+    keys: Sequence[str],
+    id_col: str,
+    cap: int | None,
+    anchors: int,
+) -> DataFrame:
+    """Candidate pairs ``(id_a, id_b)``, ``id_a < id_b``, each once, of
+    ids sharing a bucket (rows of ``bands`` with equal ``keys``) — the one
+    candidate primitive of MinHash LSH, SimHash and image/audio dHash.
+
+    **The hot-bucket rule.** A near-duplicate mega-cluster lands every
+    member in the SAME bucket, where all-pairs is quadratic. A bucket of
+    at most ``cap`` members yields all its pairs; a larger one yields a
+    STAR, every member paired only with the bucket's ``anchors``
+    smallest-id members (two-level salted top-k, never one whole-bucket
+    window): ``m * k`` candidates, not ``m^2 / 2``. ``cap=None`` yields
+    all pairs. With no bucket above the cap the pairs are the same, cap on
+    or off. In a true mega-cluster every member is near-identical to the
+    anchors, so the verified star keeps the cluster CONNECTED and its min
+    id is an anchor: dedup by cluster membership loses nothing. Given up:
+    a dissimilar hash-collision pair whose only shared bucket is hot — the
+    probabilistic trade banding already makes. :func:`cap_band_buckets`
+    truncates persisted tables to the same anchors.
+
+    With a cap, the size-joined table is materialized once (eager
+    ``localCheckpoint``): both cold sides, the hot rows and the anchor
+    selection read it."""
+    cold, hot, anchor_rows = _hot_buckets(
+        bands, keys, id_col, cap, anchors, checkpoint=True
+    )
+    a, b = cold.alias("a"), cold.alias("b")
+    same_bucket = [F.col(f"a.{k}") == F.col(f"b.{k}") for k in keys]
+    pairs = a.join(
+        b,
+        reduce(lambda x, y: x & y, same_bucket)
+        & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+    ).select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
+    if hot is not None:
+        star = (
+            hot.join(
+                anchor_rows.select(*keys, F.col(id_col).alias("__anchor__")),
+                list(keys),
+            )
+            .filter(F.col(id_col) != F.col("__anchor__"))
+            .select(
+                F.least(id_col, "__anchor__").alias("id_a"),
+                F.greatest(id_col, "__anchor__").alias("id_b"),
+            )
+        )
+        pairs = pairs.unionByName(star)
+    return pairs.dropDuplicates(["id_a", "id_b"])
+
+
 def cap_band_buckets(
     bands: DataFrame,
     id_col: str = "doc_id",
     hot_bucket_cap: int = 256,
     hot_bucket_anchors: int = 8,
 ) -> DataFrame:
-    """WRITE-TIME star-cap for a persisted band-hash table
-    (:func:`minhash_band_hashes`): buckets above ``hot_bucket_cap``
-    keep only their ``hot_bucket_anchors`` smallest-id members. Apply
-    this once at ingest, before persisting/bucketing the table
+    """WRITE-TIME truncation of a persisted band-hash table
+    (:func:`minhash_band_hashes`): buckets above ``hot_bucket_cap`` keep
+    only their ``hot_bucket_anchors`` smallest-id members — the anchors of
+    :func:`band_candidates`' hot-bucket rule. Apply this once at ingest,
+    before persisting/bucketing the table
     (``operators/scale.py:write_bucketed`` on ``["band", "bh"]``), and
     every later refresh probes a bounded table with ZERO store-side work
     — pass ``hot_bucket_cap=None`` to :func:`near_dedup_against` then,
@@ -625,25 +713,16 @@ def cap_band_buckets(
     ``hot_bucket_cap`` per append (``hot_bucket_anchors`` when the
     batch's own bucket was hot) — size probe fan-out from the cap, not
     the anchor count."""
-    if hot_bucket_cap < 1:
-        raise ValueError(f"hot_bucket_cap must be >= 1, got {hot_bucket_cap}")
-    if hot_bucket_anchors < 1:
-        raise ValueError(f"hot_bucket_anchors must be >= 1, got {hot_bucket_anchors}")
     # materialize once: the size agg, the size join, and both union
-    # branches would otherwise each re-run the caller's signature
-    # pipeline (the minhash/simhash checkpoint rationale)
-    bands = bands.localCheckpoint(eager=True)
-    sizes = bands.groupBy("band", "bh").agg(F.count("*").alias("__bsz__"))
-    with_sz = bands.join(sizes, ["band", "bh"])
-    cold = with_sz.filter(F.col("__bsz__") <= hot_bucket_cap).drop("__bsz__")
-    hot = salted_limit_per_group(
-        with_sz.filter(F.col("__bsz__") > hot_bucket_cap).drop("__bsz__"),
+    # branches would otherwise each re-run the caller's signature pipeline
+    cold, _, anchor_rows = _hot_buckets(
+        bands.localCheckpoint(eager=True),
         ["band", "bh"],
-        [F.col(id_col)],
-        hot_bucket_anchors,
         id_col,
+        hot_bucket_cap,
+        hot_bucket_anchors,
     )
-    return cold.unionByName(hot.select(*cold.columns))
+    return cold.unionByName(anchor_rows.select(*cold.columns))
 
 
 def minhash_lsh_pairs(
@@ -660,7 +739,7 @@ def minhash_lsh_pairs(
     """MinHash-LSH near-duplicate pairs, verified with exact Jaccard.
 
     Pipeline: signature -> split into ``bands`` row-chunks -> explode band
-    hashes -> self-join on (band, hash) for candidates -> exact Jaccard on
+    hashes -> :func:`band_candidates` on (band, hash) -> exact Jaccard on
     the candidates only. Output schema matches :func:`ngram_jaccard_pairs`.
 
     ``bands=None`` sizes the banding automatically from ``threshold`` via
@@ -668,48 +747,19 @@ def minhash_lsh_pairs(
     The explicit default (4 over 16 permutations) is kept for replay
     stability of existing callers.
 
-    **Hot band-buckets** (the classic LSH blow-up): a near-duplicate
-    mega-cluster — 10^5+ boilerplate variants of one template that survive
-    exact dedup — lands every member in the SAME (band, hash) bucket, and
-    all-pairs generation inside that bucket is quadratic in its size. A
-    bucket with more than ``hot_bucket_cap`` members therefore switches to
-    STAR candidate generation: every member pairs only with the bucket's
-    ``hot_bucket_anchors`` smallest-id members (selected via the two-level
-    salted primitive, never one whole-bucket window partition), so the
-    bucket's candidate count is ``m * k`` instead of ``m^2 / 2``. Buckets
-    at or under the cap keep exact all-pairs semantics, so normal corpora
-    are bit-identical with the cap on or off (pinned by test). Inside a
-    true mega-cluster every member is near-identical to the anchors, so
-    the verified star edges keep the cluster CONNECTED — downstream
-    consumers (:func:`connected_components` ->
-    :func:`keep_cluster_representatives`, the curation funnel) dedup by
-    cluster membership and lose nothing; what is deliberately given up is
-    the exhaustive pair LIST within pathological buckets (a dissimilar
-    hash-collision pair whose only shared bucket is hot can be missed —
-    LSH recall is already probabilistic, and the adversarial planted
-    10^4-member cluster test pins both the linear candidate bound and the
-    single-cluster recall). ``hot_bucket_cap=None`` restores unbounded
-    all-pairs generation. The same hazard in ``simhash_pairs`` and the
-    cross-table ``near_dedup_against`` LSH probe is bounded by their much
-    smaller batch side; this self-join is where the quadratic actually
-    detonates at corpus scale.
+    ``hot_bucket_cap``/``hot_bucket_anchors`` bound hot band-buckets by
+    :func:`band_candidates`' star rule (``None`` disables the cap). This
+    corpus self-join is where the quadratic mega-cluster blow-up actually
+    detonates at corpus scale; the adversarial planted 10^4-member cluster
+    test pins both the linear candidate bound and the single-cluster
+    recall.
     """
     if bands is None:
         bands, _ = lsh_band_plan(threshold, num_perm)
-    if bands <= 0 or num_perm % bands != 0:
-        raise ValueError(
-            f"bands ({bands}) must evenly divide num_perm ({num_perm}); "
-            "otherwise signature rows would be silently dropped"
-        )
-    if hot_bucket_cap is not None and hot_bucket_cap < 1:
-        raise ValueError(f"hot_bucket_cap must be >= 1 or None, got {hot_bucket_cap}")
-    if hot_bucket_anchors < 1:
-        raise ValueError(f"hot_bucket_anchors must be >= 1, got {hot_bucket_anchors}")
     # repartition HERE, not only inside _band_hash_table: the verify
     # stage's candidate-sliver shingle recompute below reads this same
     # frame, and running it on a single input split cost the x3/x38b
-    # gates ~3x warm when the helper extraction dropped it (caught by the
-    # final bench record, fixed same-session)
+    # queries ~3x warm
     df = ensure_min_partitions(df)
     banded = _band_hash_table(df, id_col, text_col, n, num_perm, bands)
     # Materialize the band table before the self-join: the two join sides
@@ -719,51 +769,9 @@ def minhash_lsh_pairs(
     # banded is tiny — (id, band, hash) per doc per band — so the
     # checkpoint is cheap and halves the dominant signature cost.
     banded = banded.localCheckpoint(eager=True)
-    if hot_bucket_cap is not None:
-        # one partial agg over the (tiny) checkpointed band table; the
-        # size join shuffles on the same __band__ key the pair join needs.
-        # Materialized once (r14, guide §2.4): its four consumers below
-        # (both cold self-join sides, hot, anchors) carry different
-        # attribute ids, so without this the size agg + join re-executes
-        # per consumer (no ReusedExchange) — with_sz is banded plus one
-        # int column, so the checkpoint is as cheap as banded's own.
-        sizes = banded.groupBy("__band__").agg(F.count("*").alias("__bsz__"))
-        with_sz = banded.join(sizes, "__band__").localCheckpoint(eager=True)
-        cold = with_sz.filter(F.col("__bsz__") <= hot_bucket_cap).drop("__bsz__")
-        hot = with_sz.filter(F.col("__bsz__") > hot_bucket_cap).drop("__bsz__")
-        anchors = salted_limit_per_group(
-            hot,
-            ["__band__"],
-            [F.col("__id__")],
-            hot_bucket_anchors,
-            "__id__",
-        ).select("__band__", F.col("__id__").alias("__anchor__"))
-        a, b = cold.alias("a"), cold.alias("b")
-        cold_pairs = a.join(
-            b,
-            (F.col("a.__band__") == F.col("b.__band__"))
-            & (F.col("a.__id__") < F.col("b.__id__")),
-        ).select(F.col("a.__id__").alias("id_a"), F.col("b.__id__").alias("id_b"))
-        hot_pairs = (
-            hot.join(anchors, "__band__")
-            .filter(F.col("__id__") != F.col("__anchor__"))
-            .select(
-                F.least("__id__", "__anchor__").alias("id_a"),
-                F.greatest("__id__", "__anchor__").alias("id_b"),
-            )
-        )
-        cand = cold_pairs.unionByName(hot_pairs).dropDuplicates(["id_a", "id_b"])
-    else:
-        a, b = banded.alias("a"), banded.alias("b")
-        cand = (
-            a.join(
-                b,
-                (F.col("a.__band__") == F.col("b.__band__"))
-                & (F.col("a.__id__") < F.col("b.__id__")),
-            )
-            .select(F.col("a.__id__").alias("id_a"), F.col("b.__id__").alias("id_b"))
-            .dropDuplicates(["id_a", "id_b"])
-        )
+    cand = band_candidates(
+        banded, ["__band__"], "__id__", hot_bucket_cap, hot_bucket_anchors
+    )
     # Materialize the candidate pairs once: they feed both the id semi-join
     # and the verify join, and re-deriving them would re-run the whole
     # signature pipeline. Candidate pairs are tiny relative to the corpus
@@ -785,12 +793,10 @@ def minhash_lsh_pairs(
         df.join(cand_ids, F.col(id_col) == cand_ids["__id__"], "left_semi")
         .select(F.col(id_col).alias("__id__"), word_shingles(text_col, n).alias("__sh__"))
     )
-    # Materialize the candidate shingle sliver ONCE (r14, guide §2.4):
-    # the verify join consumes it as BOTH sides (sh_a and sh_b), and the
-    # two sides carry different attribute ids, so without this the
-    # semi-join + shingle rebuild — including a full corpus scan —
-    # executes once PER SIDE (verified: the pre-r14 executed plan shows
-    # two corpus scans and two cand_ids distincts feeding the verify).
+    # Materialize the candidate shingle sliver ONCE: the verify join
+    # consumes it as BOTH sides (sh_a and sh_b), and the two sides carry
+    # different attribute ids, so without this the semi-join + shingle
+    # rebuild — including a full corpus scan — executes once PER SIDE.
     # The sliver is bounded by the candidate count, tiny next to the
     # corpus; same localCheckpoint recovery caveat as `cand` above.
     shingled = shingled.localCheckpoint(eager=True)
@@ -843,6 +849,38 @@ def hamming_distance(a: Column, b: Column) -> Column:
     return F.bit_count(a.bitwiseXOR(b))
 
 
+def _banded_hamming_pairs(
+    fingerprints: DataFrame,
+    explode_bands: Callable[[Column], Column],
+    distance: Callable[[Column, Column], Column],
+    max_hamming: int,
+    hot_bucket_cap: int | None,
+    hot_bucket_anchors: int,
+) -> DataFrame:
+    """The shared shape of the bit-fingerprint near-dup paths
+    (:func:`simhash_pairs`, image and audio dHash): ``fingerprints`` is
+    ``(__id__, __fp__)``; ``explode_bands(fp)`` is a generator yielding one
+    ``(band, bh)`` row per band of a fingerprint. Candidates are the pairs
+    sharing a band (:func:`band_candidates`), each verified on the EXACT
+    ``distance`` of the two fingerprints. Returns ``(id_a, id_b, hamming)``
+    with ``id_a < id_b`` and ``hamming <= max_hamming``."""
+    # the fingerprint table feeds the band explode AND both verify sides;
+    # materialize it once so the caller's fingerprint pipeline runs once
+    fps = fingerprints.localCheckpoint(eager=True)
+    banded = fps.select("__id__", explode_bands(F.col("__fp__")).alias("band", "bh"))
+    cand = band_candidates(
+        banded, ["band", "bh"], "__id__", hot_bucket_cap, hot_bucket_anchors
+    )
+    fa = fps.select(F.col("__id__").alias("id_a"), F.col("__fp__").alias("__fa__"))
+    fb = fps.select(F.col("__id__").alias("id_b"), F.col("__fp__").alias("__fb__"))
+    return (
+        cand.join(fa, "id_a")
+        .join(fb, "id_b")
+        .select("id_a", "id_b", distance(F.col("__fa__"), F.col("__fb__")).alias("hamming"))
+        .filter(F.col("hamming") <= max_hamming)
+    )
+
+
 def simhash_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -859,87 +897,35 @@ def simhash_pairs(
     ``max_hamming`` still works but pairs whose differing bits spread
     across every chunk are missed (approximate, like every banding LSH).
 
-    Hot chunk-buckets are bounded exactly like
-    :func:`minhash_lsh_pairs`'s band buckets (a near-dup mega-cluster
-    shares every fingerprint chunk): buckets above ``hot_bucket_cap``
-    switch to star generation around the ``hot_bucket_anchors``
-    smallest-id members — candidates linear in bucket size, hamming
-    still computed exactly on every emitted pair, cluster connectivity
-    preserved for true near-identical clusters (their members sit within
-    ``max_hamming`` of the anchors too). At/under the cap the pair set
-    is bit-identical to the uncapped path; ``hot_bucket_cap=None``
-    restores unbounded all-pairs generation."""
-    chunks = bits // chunk_bits
-    mask = (1 << chunk_bits) - 1
-    if hot_bucket_cap is not None and hot_bucket_cap < 1:
-        raise ValueError(f"hot_bucket_cap must be >= 1 or None, got {hot_bucket_cap}")
-    if hot_bucket_anchors < 1:
-        raise ValueError(f"hot_bucket_anchors must be >= 1, got {hot_bucket_anchors}")
-    df = ensure_min_partitions(df)
-    sh = df.select(F.col(id_col).alias("__id__"), simhash(text_col, bits).alias("__sh__"))
-    banded = sh.select(
-        "__id__",
-        "__sh__",
-        F.explode(
+    Hot chunk-buckets (a near-dup mega-cluster shares every fingerprint
+    chunk) follow :func:`band_candidates`' star rule; Hamming distance is
+    still computed exactly on every emitted pair."""
+    if not 1 <= chunk_bits <= bits:
+        raise ValueError(
+            f"chunk_bits must be between 1 and bits ({bits}), got {chunk_bits}"
+        )
+    # a 64-bit chunk is the whole fingerprint: -1 keeps every bit (the
+    # 2^64 - 1 literal would overflow a signed long)
+    mask = -1 if chunk_bits == 64 else (1 << chunk_bits) - 1
+
+    def chunks(fp: Column) -> Column:
+        return F.posexplode(
             F.array(
                 *[
-                    F.struct(
-                        F.lit(c).alias("chunk"),
-                        F.shiftright("__sh__", c * chunk_bits).bitwiseAND(mask).alias("cv"),
-                    )
-                    for c in range(chunks)
+                    F.shiftright(fp, c * chunk_bits).bitwiseAND(mask)
+                    for c in range(bits // chunk_bits)
                 ]
             )
-        ).alias("__c__"),
-    )
-    if hot_bucket_cap is not None:
-        # materialize once: the size agg, both cold join sides, the hot
-        # sliver, and the anchor selection would otherwise each re-run
-        # the simhash fold (the minhash path's checkpoint rationale)
-        banded = banded.localCheckpoint(eager=True)
-        sizes = banded.groupBy("__c__").agg(F.count("*").alias("__bsz__"))
-        with_sz = banded.join(sizes, "__c__")
-        cold = with_sz.filter(F.col("__bsz__") <= hot_bucket_cap).drop("__bsz__")
-        hot = with_sz.filter(F.col("__bsz__") > hot_bucket_cap).drop("__bsz__")
-        anchors = salted_limit_per_group(
-            hot, ["__c__"], [F.col("__id__")], hot_bucket_anchors, "__id__"
-        ).select(
-            "__c__",
-            F.col("__id__").alias("__aid__"),
-            F.col("__sh__").alias("__ash__"),
         )
-        a, b = cold.alias("a"), cold.alias("b")
-        cold_pairs = a.join(
-            b,
-            (F.col("a.__c__") == F.col("b.__c__"))
-            & (F.col("a.__id__") < F.col("b.__id__")),
-        ).select(
-            F.col("a.__id__").alias("id_a"),
-            F.col("b.__id__").alias("id_b"),
-            hamming_distance(F.col("a.__sh__"), F.col("b.__sh__")).alias("hamming"),
-        )
-        hot_pairs = (
-            hot.join(anchors, "__c__")
-            .filter(F.col("__id__") != F.col("__aid__"))
-            .select(
-                F.least("__id__", "__aid__").alias("id_a"),
-                F.greatest("__id__", "__aid__").alias("id_b"),
-                hamming_distance(F.col("__sh__"), F.col("__ash__")).alias("hamming"),
-            )
-        )
-        cand = cold_pairs.unionByName(hot_pairs)
-    else:
-        a, b = banded.alias("a"), banded.alias("b")
-        cand = a.join(
-            b,
-            (F.col("a.__c__") == F.col("b.__c__")) & (F.col("a.__id__") < F.col("b.__id__")),
-        ).select(
-            F.col("a.__id__").alias("id_a"),
-            F.col("b.__id__").alias("id_b"),
-            hamming_distance(F.col("a.__sh__"), F.col("b.__sh__")).alias("hamming"),
-        )
-    return cand.dropDuplicates(["id_a", "id_b"]).filter(
-        F.col("hamming") <= max_hamming
+
+    df = ensure_min_partitions(df)
+    return _banded_hamming_pairs(
+        df.select(F.col(id_col).alias("__id__"), simhash(text_col, bits).alias("__fp__")),
+        chunks,
+        hamming_distance,
+        max_hamming,
+        hot_bucket_cap,
+        hot_bucket_anchors,
     )
 
 
@@ -1007,7 +993,7 @@ def remove_duplicate_passages(
     the final exclusion is one LEFT join flag on ``(id, position)``
     against the covered set; reassembly, the token count and the removed
     count come from one ``groupBy(id)`` over the flagged token stream
-    (no join back to the input — r14), whose state is bounded by a
+    (no join back to the input), whose state is bounded by a
     single document's tokens. No windows, no UDFs, no driver collection,
     no all-pairs anywhere.
 
@@ -1096,14 +1082,14 @@ def remove_duplicate_passages(
         ).alias("__tp__"),
     ).distinct()
     # Reassembly, token count and removed count from ONE groupBy over the
-    # flagged token stream (r14, the remove_boilerplate_lines shape): the
-    # old tail anti-joined `covered` out, grouped, then joined the result
-    # back against a FOURTH corpus scan just to recover n_tokens and the
-    # NULL/'' contract — a full corpus pass plus a doc-grain shuffle for
-    # columns the token stream already carries. posexplode_outer keeps
-    # zero-token docs (NULL/empty/whitespace text) as one NULL-position
-    # sentinel row, and a carried isNull flag separates NULL text from ''
-    # (whitespace_tokens maps both to an empty array).
+    # flagged token stream (the remove_boilerplate_lines shape): an
+    # anti-join, group and join back against a FOURTH corpus scan would
+    # cost a full corpus pass plus a doc-grain shuffle just to recover
+    # n_tokens and the NULL/'' contract — columns the token stream already
+    # carries. posexplode_outer keeps zero-token docs (NULL/empty/whitespace
+    # text) as one NULL-position sentinel row, and a carried isNull flag
+    # separates NULL text from '' (whitespace_tokens maps both to an empty
+    # array).
     tokpos = base.select(
         F.col(id_col),
         F.col(text_col).isNull().alias("__tnull__"),
@@ -1377,8 +1363,8 @@ def near_dedup_against(
     ``mode='exact'`` computes TWO-SIDED pairs directly — batch grams
     joined against store grams, so the work is |B| x |S| gram collisions
     and within-store pairs are never generated (an incremental operator
-    whose cost scaled with store² would defeat its own point; a review
-    pass caught the earlier union-self-join form doing exactly that).
+    whose cost scaled with store² would defeat its own point, which a
+    union-self-join form would do).
     Deterministic, so the composed operator admits a full SQL oracle
     (the x38/x38b twin pattern). ``mode='lsh'`` (the 100-TB scale path)
     reuses :func:`minhash_lsh_pairs` verbatim — banded signatures,
@@ -1416,20 +1402,18 @@ def near_dedup_against(
     ``hot_bucket_cap=None`` or use ``store_bands``.
 
     ``hot_bucket_cap``/``hot_bucket_anchors`` bound the LSH paths' hot
-    band-buckets (LSH modes only; exact mode has no buckets): the
-    side-tagged union path inherits :func:`minhash_lsh_pairs`' star
-    generation, and the ``store_bands`` probe caps hot STORE buckets to
-    their ``hot_bucket_anchors`` smallest-id members — a batch doc
+    band-buckets (LSH modes only; exact mode has no buckets) by
+    :func:`band_candidates`' rule: the side-tagged union path takes its
+    star, and the ``store_bands`` probe truncates hot STORE buckets to
+    their anchors (:func:`cap_band_buckets`' truncation) — a batch doc
     probing a near-dup mega-cluster verifies against the cluster's
     smallest ids instead of all 10^5+ of them, and since the output
     keeps the MINIMUM verified store id, a true mega-cluster match
-    reports the same id capped or not (the min id IS an anchor). Only a
-    dissimilar hash-collision pair hiding in a hot bucket can be missed
-    — the same probabilistic trade LSH already makes. Probe-side capping
-    re-shuffles the band table, so for a table already capped AT INGEST
-    (:func:`cap_band_buckets`) and bucketed on ``(band, bh)``, pass
-    ``hot_bucket_cap=None``: the probe then rides the bucketed layout
-    with no store-side Exchange at all (pinned by test).
+    reports the same id capped or not (the min id IS an anchor).
+    Probe-side capping re-shuffles the band table, so for a table already
+    capped AT INGEST (:func:`cap_band_buckets`) and bucketed on
+    ``(band, bh)``, pass ``hot_bucket_cap=None``: the probe then rides the
+    bucketed layout with no store-side Exchange at all (pinned by test).
     """
     if mode not in ("lsh", "exact"):
         raise ValueError(f"mode must be 'lsh' or 'exact', got {mode!r}")
@@ -1476,29 +1460,12 @@ def near_dedup_against(
         ).select(F.col(id_col).alias("__bid__"), "band", "bh")
         sb = store_bands.select(F.col(sid).alias("__sid__"), "band", "bh")
         if hot_bucket_cap is not None:
-            if hot_bucket_cap < 1:
-                raise ValueError(
-                    f"hot_bucket_cap must be >= 1 or None, got {hot_bucket_cap}"
-                )
-            if hot_bucket_anchors < 1:
-                raise ValueError(
-                    f"hot_bucket_anchors must be >= 1, got {hot_bucket_anchors}"
-                )
-            # one partial agg over the persisted band table; the size join
-            # pre-shuffles sb on the (band, bh) key the candidate join
-            # needs anyway. Hot store buckets collapse to their k
-            # smallest-id members (see the docstring trade).
-            ssizes = sb.groupBy("band", "bh").agg(F.count("*").alias("__bsz__"))
-            sbz = sb.join(ssizes, ["band", "bh"])
-            s_cold = sbz.filter(F.col("__bsz__") <= hot_bucket_cap).drop("__bsz__")
-            s_hot = salted_limit_per_group(
-                sbz.filter(F.col("__bsz__") > hot_bucket_cap).drop("__bsz__"),
-                ["band", "bh"],
-                [F.col("__sid__")],
-                hot_bucket_anchors,
-                "__sid__",
+            # hot store buckets collapse to their anchors (see the
+            # docstring trade); no checkpoint, sb is a persisted table
+            cold, _, anchor_rows = _hot_buckets(
+                sb, ["band", "bh"], "__sid__", hot_bucket_cap, hot_bucket_anchors
             )
-            sb = s_cold.unionByName(s_hot)
+            sb = cold.unionByName(anchor_rows)
         cand = (
             bb.join(sb, ["band", "bh"])
             .select("__bid__", "__sid__")
@@ -1553,15 +1520,9 @@ def near_dedup_against(
         # ordering makes a mixed mega-cluster's anchors store-side, so
         # every non-anchor batch member keeps a surviving cross edge
         # (batch-prefix-first anchors would leave only batch-batch star
-        # edges, silently reporting the whole cluster novel; caught by a
-        # review pass, pinned by TestUnionLshHotBuckets). NOTE the anchor
-        # order here is LEXICOGRAPHIC over the string surrogate ('a:10' <
-        # 'a:2'), so inside a capped hot bucket the reported near_dup_of
-        # is the min VERIFIED id among those anchors, not necessarily the
-        # cluster's numeric minimum — detection is unaffected (anchors
-        # are near-identical to every member), and the strict min-id
-        # guarantee belongs to the store_bands path, whose anchors order
-        # by the real typed id (cap_band_buckets / the probe-side cap).
+        # edges, silently reporting the whole cluster novel; pinned by
+        # TestUnionLshHotBuckets). Anchors order LEXICOGRAPHICALLY over the
+        # surrogate: see the docstring's tie rule.
         b_tagged = batch.select(
             F.concat(F.lit("b:"), F.col(id_col).cast("string")).alias("__uid__"),
             F.col(text_col).alias("__text__"),

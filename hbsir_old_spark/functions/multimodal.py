@@ -127,10 +127,10 @@ def _decode_png_minimal(content: bytes) -> np.ndarray:
     ftypes = rows[:, 0]
     if ftypes.max(initial=0) > 4:
         raise ValueError(f"bad PNG filter type {int(ftypes.max())}")
-    # Vectorized fast path (r14, guide §4.2: hand whole arrays to numpy
-    # instead of per-byte Python): filter-0 scanlines need no unfiltering
-    # at all — the common output of simple encoders, including build_png —
-    # so an all-zero filter column decodes as one slice+reshape. Same
+    # Vectorized fast path (hand whole arrays to numpy instead of
+    # per-byte Python): filter-0 scanlines need no unfiltering at all —
+    # the common output of simple encoders, including build_png — so an
+    # all-zero filter column decodes as one slice+reshape. Same
     # bytes out as the general loop below (pinned by the roundtrip and
     # Pillow cross-check tests).
     if not ftypes.any():
@@ -206,7 +206,7 @@ def _real_decode_image(content: bytes) -> np.ndarray:
     # keeps its alpha (LA/PA -> RGBA, not RGB — convert('RGB') would
     # silently drop the band); 16-bit/int/float modes are SCALED to
     # uint8, never convert('RGB')-ed, which clips at 255 and destroys
-    # high-bit-depth data (review-pass finding)
+    # high-bit-depth data
     if img.mode == "P":
         img = img.convert("RGBA" if "transparency" in img.info else "RGB")
     elif img.mode in ("LA", "PA"):
@@ -225,11 +225,12 @@ _WAV_MAGIC_WAVE = b"WAVE"
 
 
 def _decode_wav_stdlib(content: bytes) -> tuple[np.ndarray, int]:
-    """Pure-stdlib WAV/PCM decode via the ``wave`` module (the r11 PNG
-    pattern applied to audio): 8/16/24/32-bit integer PCM, any channel
-    count. Returns ``(samples, sample_rate)`` with ``samples`` an
-    ``(n_frames, channels)`` int32 array — 8-bit WAV is unsigned and is
-    recentred to signed (-128..127) so every width shares one convention.
+    """Pure-stdlib WAV/PCM decode via the ``wave`` module (the
+    :func:`_decode_png_minimal` pattern applied to audio): 8/16/24/32-bit
+    integer PCM, any channel count. Returns ``(samples, sample_rate)``
+    with ``samples`` an ``(n_frames, channels)`` int32 array — 8-bit WAV
+    is unsigned and is recentred to signed (-128..127) so every width
+    shares one convention.
     Integer-exact by construction (no float resampling), which is what
     lets the x47 gate oracle recompute sample sums arithmetically."""
     import io
@@ -263,11 +264,11 @@ def _real_decode_audio(content: bytes) -> tuple[np.ndarray, int]:
     installed — because results must not depend on the environment:
     ``soundfile.read(dtype='int16')`` RESCALES non-16-bit PCM (8-bit
     << 8, 24-bit >> 8, 32-bit >> 16) while this module's contract is raw
-    integer sample values (review-pass finding; the x47 oracle and the
-    width-pinned unit tests encode that contract). Non-WAV bytes go to
-    soundfile when installed (converted to int16 scale — the only
-    meaningful integer reading for lossy/float formats), else the
-    documented NotImplementedError seam."""
+    integer sample values (the x47 oracle and the width-pinned unit
+    tests encode that contract). Non-WAV bytes go to soundfile when
+    installed (converted to int16 scale — the only meaningful integer
+    reading for lossy/float formats), else the documented
+    NotImplementedError seam."""
     if (
         content
         and content[:4] == _WAV_MAGIC_RIFF
@@ -733,60 +734,30 @@ def image_near_dup_pairs(
     hot_bucket_cap: int | None = 256,
     hot_bucket_anchors: int = 8,
 ) -> DataFrame:
-    """Near-duplicate image pairs from dHash band arrays (the
-    :func:`image_dhash` output): banded candidate generation — a pair is
-    a candidate iff SOME band matches exactly (never all-pairs) — then
-    exact verification ``hamming <= max_hamming`` JVM-side. With k bands
-    over ``B`` total bits, any pair within ``k - 1`` bit flips is
-    guaranteed a matching band (pigeonhole); beyond that the banding is
-    the standard LSH recall/cost trade, same as the text-side MinHash
-    design it mirrors. Hot buckets (a constant-background corpus where
-    one band value recurs everywhere) are star-capped via
-    :func:`~hbsir_old_spark.functions.dedup.cap_band_buckets` so no
-    bucket joins quadratically.
+    """Near-duplicate pairs from dHash band arrays (the
+    :func:`image_dhash` / :func:`audio_dhash` output): banded candidate
+    generation — a pair is a candidate iff SOME band matches exactly
+    (never all-pairs) — then exact verification ``hamming <= max_hamming``
+    JVM-side. With k bands over ``B`` total bits, any pair within
+    ``k - 1`` bit flips is guaranteed a matching band (pigeonhole); beyond
+    that the banding is the standard LSH recall/cost trade, same as the
+    text-side SimHash path it shares its shape with
+    (:func:`~hbsir_old_spark.functions.dedup.simhash_pairs`). Hot buckets
+    (a constant-background corpus where one band value recurs everywhere)
+    follow :func:`~hbsir_old_spark.functions.dedup.band_candidates`' star
+    rule, so no bucket joins quadratically and a near-identical hot
+    cluster stays connected.
 
     Returns ``(id_a, id_b, hamming)`` with ``id_a < id_b``."""
-    from .dedup import cap_band_buckets
+    from .dedup import _banded_hamming_pairs
 
-    # the band table is consumed by the self-join AND the verify joins —
-    # materialize once so the caller's decode pipeline runs once
-    hashes = hashes.select(
-        F.col(id_col).alias("__id__"), F.col("bands").alias("__bands__")
-    ).localCheckpoint(eager=True)
-    exploded = hashes.select(
-        F.col("__id__"), F.posexplode("__bands__").alias("band", "bh")
-    )
-    if hot_bucket_cap is not None:
-        # Materialize the CAPPED band table (r14, guide §2.4): the
-        # self-join consumes it as both sides, so without this the whole
-        # cap machinery (bucket-size agg + size join + salted anchor
-        # windows) executes once per side — the pre-r14 executed x51x
-        # plan carried four copies of the size aggregate. The capped
-        # table is (id, band, bh) per asset per band, tiny at any scale;
-        # cap_band_buckets' own input checkpoint covers its three
-        # internal consumers, this one covers the join fan-out.
-        exploded = cap_band_buckets(
-            exploded,
-            id_col="__id__",
-            hot_bucket_cap=hot_bucket_cap,
-            hot_bucket_anchors=hot_bucket_anchors,
-        ).localCheckpoint(eager=True)
-    a = exploded.select(F.col("__id__").alias("id_a"), "band", "bh")
-    b = exploded.select(F.col("__id__").alias("id_b"), "band", "bh")
-    cand = (
-        a.join(b, ["band", "bh"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    ha = hashes.select(F.col("__id__").alias("id_a"), F.col("__bands__").alias("__ba__"))
-    hb = hashes.select(F.col("__id__").alias("id_b"), F.col("__bands__").alias("__bb__"))
-    return (
-        cand.join(ha, "id_a")
-        .join(hb, "id_b")
-        .withColumn("hamming", hamming_distance_bands(F.col("__ba__"), F.col("__bb__")))
-        .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
+    return _banded_hamming_pairs(
+        hashes.select(F.col(id_col).alias("__id__"), F.col("bands").alias("__fp__")),
+        F.posexplode,
+        hamming_distance_bands,
+        max_hamming,
+        hot_bucket_cap,
+        hot_bucket_anchors,
     )
 
 
@@ -813,11 +784,6 @@ def image_near_dedup_clusters(
     )
 
 
-# the banded Hamming machinery above is modality-agnostic — it consumes
-# (id, bands) rows regardless of what produced the band array
-banded_near_dup_pairs = image_near_dup_pairs
-
-
 def near_dedup_clusters_from_bands(
     hashes: DataFrame,
     id_col: str = "asset_id",
@@ -834,7 +800,7 @@ def near_dedup_clusters_from_bands(
     from .dedup import connected_components
 
     hashes = hashes.localCheckpoint(eager=True)
-    pairs = banded_near_dup_pairs(
+    pairs = image_near_dup_pairs(
         hashes,
         id_col=id_col,
         max_hamming=max_hamming,

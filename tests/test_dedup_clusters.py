@@ -854,6 +854,11 @@ class TestSimhashHotBuckets:
             simhash_pairs(df, hot_bucket_cap=0)
         with pytest.raises(ValueError, match="hot_bucket_anchors"):
             simhash_pairs(df, hot_bucket_anchors=0)
+        # zero chunks would mean zero candidates, silently
+        with pytest.raises(ValueError, match="chunk_bits"):
+            simhash_pairs(df, bits=32, chunk_bits=64)
+        with pytest.raises(ValueError, match="chunk_bits"):
+            simhash_pairs(df, chunk_bits=0)
 
 
 class TestStoreBandsHotBuckets:
@@ -1033,6 +1038,63 @@ class TestCapBandBuckets:
             spark.sql("DROP TABLE IF EXISTS near_store_bands_bucketed")
 
 
+class TestBandCandidates:
+    """The one banded-candidate primitive: all pairs in cold buckets, a
+    star around the k smallest ids in hot ones, each pair once."""
+
+    def test_cold_all_pairs_hot_star(self, spark):
+        from hbsir_old_spark.functions.dedup import band_candidates
+
+        rows = (
+            # cold bucket: 3 members
+            [(i, 0, 111) for i in range(3)]
+            # a second cold bucket repeating the pair (0, 1)
+            + [(i, 2, 333) for i in range(2)]
+            # hot bucket: 20 members
+            + [(i, 1, 222) for i in range(10, 30)]
+        )
+        bands = spark.createDataFrame(rows, "id long, band int, bh int")
+
+        def pairs(cap):
+            got = [
+                (r["id_a"], r["id_b"])
+                for r in band_candidates(bands, ["band", "bh"], "id", cap, 4).collect()
+            ]
+            assert len(got) == len(set(got)), "duplicate pairs"
+            return set(got)
+
+        cold = {(0, 1), (0, 2), (1, 2)}
+        hot = range(10, 30)
+        star = {(a, b) for a in range(10, 14) for b in hot if a < b}
+        assert pairs(5) == cold | star
+        assert pairs(None) == cold | {(a, b) for a in hot for b in hot if a < b}
+
+    def test_curation_checkpoint_cascade_is_pinned(self, spark, monkeypatch):
+        # minhash_lsh_pairs materializes banded, the size-joined bands (cap
+        # only), the candidates and the shingle sliver: one eager job each
+        from hbsir_old_spark.functions.dedup import minhash_lsh_pairs
+
+        df = spark.createDataFrame(
+            [(i, f"shared words of document {i % 3}") for i in range(12)],
+            ["doc_id", "text"],
+        )
+        # the concrete (classic) DataFrame class, not the pyspark.sql facade
+        cls = type(df)
+        calls = []
+        original = cls.localCheckpoint
+
+        def counting(self, *args, **kwargs):
+            calls.append(kwargs)
+            return original(self, *args, **kwargs)
+
+        monkeypatch.setattr(cls, "localCheckpoint", counting)
+        minhash_lsh_pairs(df, n=2, hot_bucket_cap=4)
+        assert calls == [{"eager": True}] * 4
+        calls.clear()
+        minhash_lsh_pairs(df, n=2, hot_bucket_cap=None)
+        assert calls == [{"eager": True}] * 3
+
+
 class TestUnionLshHotBuckets:
     """Review-pass regression: in near_dedup_against's side-tagged union
     LSH path, hot-bucket star anchors must come from the STORE side (the
@@ -1068,3 +1130,15 @@ class TestUnionLshHotBuckets:
         # a few members whose unique token wins enough minhash positions
         # miss every band (LSH recall, not the cap)
         assert matched >= 396, f"only {matched}/400 mega-cluster members matched"
+
+
+def test_simhash_pairs_whole_fingerprint_chunk(spark):
+    # chunk_bits == bits == 64: one chunk holding every bit (its mask is
+    # not a representable long literal)
+    from hbsir_old_spark.functions.dedup import simhash_pairs
+
+    df = spark.createDataFrame(
+        [(1, "a b c d"), (2, "a b c d"), (3, "x y z")], ["doc_id", "text"]
+    )
+    out = simhash_pairs(df, bits=64, chunk_bits=64, max_hamming=0)
+    assert [tuple(r) for r in out.collect()] == [(1, 2, 0)]

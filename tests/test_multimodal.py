@@ -849,18 +849,19 @@ def test_image_near_dedup_clusters_includes_singletons(spark):
 
 def test_image_near_dup_hot_bucket_cap_bounds_candidates(spark):
     """A constant-background corpus puts every image in the same band
-    buckets; the write-path star cap must bound the self-join instead of
-    letting it go quadratic."""
+    buckets; the hot-bucket star must bound the self-join instead of
+    letting it go quadratic, and must keep the cluster whole."""
     from hbsir_old_spark.functions.multimodal import (
         ASSET_SCHEMA,
         image_dhash,
         image_near_dup_pairs,
+        near_dedup_clusters_from_bands,
     )
 
     n = 40
     images = [_grad_image(3, shift=i % 4) for i in range(n)]
     assets = spark.createDataFrame(_asset_rows(images), schema=ASSET_SCHEMA)
-    hashes = image_dhash(assets)
+    hashes = image_dhash(assets).localCheckpoint(eager=True)
     capped = image_near_dup_pairs(
         hashes, max_hamming=6, hot_bucket_cap=8, hot_bucket_anchors=4
     )
@@ -871,6 +872,14 @@ def test_image_near_dup_hot_bucket_cap_bounds_candidates(spark):
     assert all(r["id_a"] < 16 for r in rows), "left ends must be anchor ids"
     # and min-id reachability survives capping: id 0 pairs with others
     assert any(r["id_a"] == 0 for r in rows)
+    # every member keeps a star edge to an anchor, so capping does not
+    # split the cluster (truncating hot buckets to their anchors would
+    # leave one cluster of 4 and 36 singletons)
+    assert {r["id_a"] for r in rows} | {r["id_b"] for r in rows} == set(range(n))
+    clusters = near_dedup_clusters_from_bands(
+        hashes, max_hamming=6, hot_bucket_cap=8, hot_bucket_anchors=4
+    )
+    assert {r["rep_id"]: r["cluster_size"] for r in clusters.collect()} == {0: n}
 
 
 def test_image_dhash_rejects_bad_band_split():
